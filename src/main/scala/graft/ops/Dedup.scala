@@ -117,10 +117,11 @@ object Dedup {
     * r5 sweep's q_minhash_lsh_pairs); [[fingerprints]]' simhash and
     * n_shingles columns are dead weight here and are never computed. At
     * the 10^12-doc design point the persisted frame is ~(8 + 8·numPerm) B
-    * per doc and spills to disk — the [[writeBandIndex]] precedent, far
-    * cheaper than re-shingling 100 TB of text per branch. The cache entry
-    * lives until the session drops it (the frame is returned inside a lazy
-    * plan, so there is no post-action hook to unpersist on). */
+    * per doc and spills to disk, far cheaper than re-shingling 100 TB of
+    * text per branch. The LSH paths' cache entry lives until the session
+    * drops it (the frame is returned inside a lazy plan, so there is no
+    * post-action hook to unpersist on); [[writeBandIndex]] unpersists after
+    * its two writes. */
   private def minhashSigs(docs: DataFrame, idCol: String, textCol: String,
                           numPerm: Int, shingleN: Int): DataFrame = {
     val spark = docs.sparkSession
@@ -157,60 +158,28 @@ object Dedup {
       spark.sparkContext.longAccumulator("graft.lsh.truncatedRows")
   }
 
-  /** Per-bucket candidate pair generation over (bucket_key, id) rows ONLY
-    * — the shared core of the MinHash-band and embedding-LSH paths.
-    * Oversized buckets keep their `maxBucket` smallest ids (a bounded
-    * max-heap, so the guard is deterministic regardless of shuffle arrival
-    * order) and REPORT the truncation through the accumulators. Output is
-    * distinct (id_a < id_b) pairs — bare ids, tiny rows. */
-  private[ops] def bucketPairs(keyed: DataFrame, maxBucket: Int,
-                               m: LshMetrics): DataFrame = {
+  /** Per-bucket candidate pair generation over (bucket_key, id, is_new)
+    * rows ONLY — the one core of the MinHash-band, incremental and
+    * embedding-LSH paths. Oversized buckets keep their `maxBucket` smallest
+    * ids (a bounded max-heap, so the guard is deterministic regardless of
+    * shuffle arrival order) and REPORT the truncation through the
+    * accumulators. A pair is emitted only when at least one member is NEW:
+    * batch callers tag every row new; the incremental path tags the index's
+    * rows old (old–old pairs were resolved when the index was built;
+    * regenerating them is the n² trap of naive re-runs). Output is distinct
+    * (id_a < id_b) pairs — bare ids, tiny rows. */
+  private def bucketPairs(keyed: DataFrame, maxBucket: Int,
+                          m: LshMetrics): DataFrame = {
     val spark = keyed.sparkSession
     import spark.implicits._
     // capture only the accumulators in the task closure
-    val truncBuckets = m.truncatedBuckets
-    val truncRows = m.truncatedRows
-    keyed.as[(Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroups { (_, it) =>
-        // bounded max-heap: keeps the SMALLEST maxBucket ids so the skew
-        // guard is deterministic regardless of shuffle arrival order
-        val heap = new java.util.PriorityQueue[java.lang.Long](
-          math.min(maxBucket, 16), java.util.Collections.reverseOrder())
-        var extra = 0L
-        it.foreach { case (_, id) =>
-          if (heap.size < maxBucket) heap.add(id)
-          else if (id < heap.peek()) { heap.poll(); heap.add(id); extra += 1 }
-          else extra += 1
-        }
-        if (extra > 0) { truncBuckets.add(1L); truncRows.add(extra) }
-        val members = new Array[Long](heap.size)
-        var i = members.length - 1
-        while (i >= 0) { members(i) = heap.poll(); i -= 1 }
-        for {
-          i <- members.indices.iterator
-          j <- (i + 1) until members.length
-        } yield (members(i), members(j))
-      }.toDF("id_a", "id_b")
-      .distinct() // same pair can match in several buckets; ids only — tiny
-  }
-
-  /** [[bucketPairs]] with a per-row novelty tag: emits only pairs where at
-    * least one member is NEW — the incremental variant (old–old pairs were
-    * resolved when the index was built; regenerating them is the n² trap
-    * of naive re-runs). Same deterministic smallest-ids skew guard and
-    * truncation telemetry as the batch core. */
-  private[ops] def bucketPairsTagged(keyed: DataFrame, maxBucket: Int,
-                                     m: LshMetrics): DataFrame = {
-    val spark = keyed.sparkSession
-    import spark.implicits._
     val truncBuckets = m.truncatedBuckets
     val truncRows = m.truncatedRows
     keyed.as[(Long, Long, Boolean)]
       .groupByKey(_._1)
       .flatMapGroups { (_, it) =>
         val heap = new java.util.PriorityQueue[(Long, Boolean)](
-          16, Ordering.by[(Long, Boolean), Long](_._1).reverse)
+          math.min(maxBucket, 16), Ordering.by[(Long, Boolean), Long](_._1).reverse)
         var extra = 0L
         it.foreach { case (_, id, isNew) =>
           if (heap.size < maxBucket) heap.add((id, isNew))
@@ -227,7 +196,32 @@ object Dedup {
           if members(i)._2 || members(j)._2
         } yield (members(i)._1, members(j)._1)
       }.toDF("id_a", "id_b")
-      .distinct()
+      .distinct() // same pair can match in several buckets; ids only — tiny
+  }
+
+  /** Joins an (id, `v`) frame onto both ends of an (id_a, id_b) pair set
+    * as `v_a` / `v_b` — only the candidate slice's values move. */
+  private def joinSides(pairs: DataFrame, values: DataFrame, v: String): DataFrame = {
+    def side(s: String) = values.select(col("id").as(s"id_$s"), col(v).as(s"${v}_$s"))
+    pairs.join(side("a"), "id_a").join(side("b"), "id_b")
+  }
+
+  /** The shared MinHash-LSH tail: bucket pairs, then the (id, minhash)
+    * signatures join back onto the candidate set (small vs corpus; AQE
+    * broadcasts the pair side) and signature agreement becomes
+    * `est_jaccard` — the native fused-loop expression
+    * [[graft.functions.SigAgreement]] in place of the interpreted
+    * `aggregate(zip_with(...))` fold (the [[verifyCosine]] treatment: same
+    * semantics, bitwise-pinned by SigAgreementSpec). */
+  private def lshPairs(keyed: DataFrame, sigs: DataFrame, numPerm: Int,
+                       maxBucket: Int, m: LshMetrics): DataFrame = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    val agree = ColumnBridge.column(graft.functions.SigAgreement(
+      ColumnBridge.expression(col("minhash_a")),
+      ColumnBridge.expression(col("minhash_b"))))
+    joinSides(bucketPairs(keyed, maxBucket, m), sigs, "minhash")
+      .select(col("id_a"), col("id_b"),
+        round(agree.cast("double") / numPerm, 6).as("est_jaccard"))
   }
 
   /** Incremental MinHash-LSH candidates: a NEW batch against the band
@@ -247,35 +241,15 @@ object Dedup {
                           numPerm: Int = 32, bands: Int = 16,
                           shingleN: Int = 3, maxBucket: Int = 1000,
                           metrics: Option[LshMetrics] = None): DataFrame = {
-    val spark = newDocs.sparkSession
-    val m = metrics.getOrElse(new LshMetrics(spark))
+    val m = metrics.getOrElse(new LshMetrics(newDocs.sparkSession))
     // minhash-only + persisted: the band branch and the signature union
     // both read it (see [[minhashSigs]])
     val newFps = minhashSigs(newDocs, idCol, textCol, numPerm, shingleN)
-    val tagged = indexBands
+    val keyed = indexBands
       .select(col("band_key"), col("id"), lit(false).as("is_new"))
-      .unionByName(minhashBands(newFps, bands)
-        .select(col("band_key"), col("id"), lit(true).as("is_new")))
-    val pairs = bucketPairsTagged(tagged, maxBucket, m)
-    val sigs = indexSigs.select(col("id"), col("minhash"))
-      .unionByName(newFps.select(col("id"), col("minhash")))
-    pairs
-      .join(sigs.withColumnRenamed("id", "id_a").withColumnRenamed("minhash", "mh_a"), "id_a")
-      .join(sigs.withColumnRenamed("id", "id_b").withColumnRenamed("minhash", "mh_b"), "id_b")
-      .withColumn("est_jaccard", estJaccard(col("mh_a"), col("mh_b"), numPerm))
-      .select(col("id_a"), col("id_b"), col("est_jaccard"))
-  }
-
-  /** Estimated Jaccard from signature agreement — the native fused-loop
-    * expression [[graft.functions.SigAgreement]] in place of the
-    * interpreted `aggregate(zip_with(...))` fold (the [[verifyCosine]]
-    * treatment: same semantics, bitwise-pinned by SigAgreementSpec, one
-    * codegen'd primitive loop per candidate pair). */
-  private def estJaccard(mhA: Column, mhB: Column, numPerm: Int): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    round(ColumnBridge.column(graft.functions.SigAgreement(
-      ColumnBridge.expression(mhA),
-      ColumnBridge.expression(mhB))).cast("double") / numPerm, 6)
+      .unionByName(minhashBands(newFps, bands).withColumn("is_new", lit(true)))
+    val sigs = indexSigs.select(col("id"), col("minhash")).unionByName(newFps)
+    lshPairs(keyed, sigs, numPerm, maxBucket, m)
   }
 
   /** Persist a corpus band index for [[incrementalLshPairs]]: band rows
@@ -286,15 +260,13 @@ object Dedup {
   def writeBandIndex(docs: DataFrame, idCol: String, textCol: String,
                      path: String, numPerm: Int = 32, bands: Int = 16,
                      shingleN: Int = 3, numBuckets: Int = 64): Unit = {
-    val fps = fingerprints(docs, idCol, textCol, numPerm, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val fps = minhashSigs(docs, idCol, textCol, numPerm, shingleN)
     try {
       minhashBands(fps, bands)
         .repartition(numBuckets, col("band_key"))
         .sortWithinPartitions(col("band_key"))
         .write.mode("overwrite").parquet(s"$path/bands")
-      fps.select(col("id"), col("minhash"))
-        .write.mode("overwrite").parquet(s"$path/sigs")
+      fps.write.mode("overwrite").parquet(s"$path/sigs")
     } finally fps.unpersist()
   }
 
@@ -306,22 +278,12 @@ object Dedup {
                         numPerm: Int = 64, bands: Int = 16,
                         shingleN: Int = 3, maxBucket: Int = 1000,
                         metrics: Option[LshMetrics] = None): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val m = metrics.getOrElse(new LshMetrics(spark))
+    val m = metrics.getOrElse(new LshMetrics(docs.sparkSession))
     // minhash-only frame, computed ONCE and persisted (see [[minhashSigs]]
     // — the band branch and both signature-join branches all read it)
     val fps = minhashSigs(docs, idCol, textCol, numPerm, shingleN)
-    // per-bucket pair generation over (band_key, id) rows only
-    val pairs = bucketPairs(minhashBands(fps, bands), maxBucket, m)
-    // signatures join back onto the candidate set (small vs corpus; AQE
-    // broadcasts the pair side); agreement is one fused codegen'd loop.
-    val sigs = fps.select($"id", $"minhash")
-    pairs
-      .join(sigs.withColumnRenamed("id", "id_a").withColumnRenamed("minhash", "mh_a"), "id_a")
-      .join(sigs.withColumnRenamed("id", "id_b").withColumnRenamed("minhash", "mh_b"), "id_b")
-      .withColumn("est_jaccard", estJaccard($"mh_a", $"mh_b", numPerm))
-      .select($"id_a", $"id_b", $"est_jaccard")
+    lshPairs(minhashBands(fps, bands).withColumn("is_new", lit(true)), fps,
+      numPerm, maxBucket, m)
   }
 
   /** Smallest divisor of 64 that is >= maxHamming+1 (pigeonhole: a pair
@@ -407,9 +369,7 @@ object Dedup {
     val spark = docs.sparkSession
     import spark.implicits._
     val texts = docs.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
-    candidates
-      .join(texts.withColumnRenamed("id", "id_a").withColumnRenamed("text", "text_a"), "id_a")
-      .join(texts.withColumnRenamed("id", "id_b").withColumnRenamed("text", "text_b"), "id_b")
+    joinSides(candidates, texts, "text")
       .select(col("id_a"), col("id_b"), col("est_jaccard"), col("text_a"), col("text_b"))
       .as[(Long, Long, Double, String, String)]
       .map { case (a, b, est, ta, tb) =>
@@ -480,7 +440,8 @@ object Dedup {
                               seed: Long = 42L, maxBucket: Int = 1000,
                               metrics: Option[LshMetrics] = None): DataFrame = {
     val m = metrics.getOrElse(new LshMetrics(emb.sparkSession))
-    bucketPairs(embeddingBuckets(emb, idCol, embCol, bits, tables, seed), maxBucket, m)
+    bucketPairs(embeddingBuckets(emb, idCol, embCol, bits, tables, seed)
+      .withColumn("is_new", lit(true)), maxBucket, m)
   }
 
   /** Exact cosine for a candidate pair set: vectors join back by id
@@ -494,9 +455,7 @@ object Dedup {
                    embCol: String): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val vecs = emb.select(col(idCol).cast("long").as("id"), col(embCol).as("v"))
-    candidates
-      .join(vecs.withColumnRenamed("id", "id_a").withColumnRenamed("v", "v_a"), "id_a")
-      .join(vecs.withColumnRenamed("id", "id_b").withColumnRenamed("v", "v_b"), "id_b")
+    joinSides(candidates, vecs, "v")
       .withColumn("cos", round(ColumnBridge.column(graft.functions.CosinePair(
         ColumnBridge.expression(col("v_a")),
         ColumnBridge.expression(col("v_b")))), 6))

@@ -36,8 +36,10 @@ object QualityLm {
     * `array_remove(.., "")` rather than `filter(.., t -> t != "")`:
     * identical result (split yields no NULL elements), but ArrayRemove is
     * codegen'd while the HOF filter is CodegenFallback — an interpreted
-    * lambda per token per doc (guide §4). */
-  def tokens(text: Column): Column =
+    * lambda per token per doc (guide §4). Private so that only this
+    * `split` ever feeds it: a caller-built array could carry NULL elements,
+    * which `array_remove` would keep. */
+  private def tokens(text: Column): Column =
     array_remove(split(lower(text), "[^a-z0-9]+"), "")
 
   /** Fit the unigram vocab: top `vocabSize` tokens by (count desc, token

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.clean.{Cleaner, Sanitize}
 import graft.html.{HtmlParser, Serializer}
@@ -306,6 +306,16 @@ object Extract {
 
   final case class RunSummary(docs: Long, failures: Long, buckets: Int)
 
+  /** The one bucket-partitioned write of the pipeline: `url_bucket`
+    * partition dirs, dynamic overwrite (writer-scoped — the session conf is
+    * never mutated), so a write replaces exactly the buckets present in
+    * `df`. A resume or partial refresh therefore keeps every other bucket's
+    * rows; a full overwrite would wipe completed buckets' outputs (and an
+    * all-done idempotent rerun would empty the metrics sidecar). */
+  private[graft] def bucketWrite(df: DataFrame): DataFrameWriter[Row] =
+    df.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic").partitionBy("url_bucket")
+
   /**
    * Full job: dedup → (optional changed-only) → extract → write all outputs
    * under `outDir`, skipping url_buckets already completed in the `progress`
@@ -387,9 +397,7 @@ object Extract {
         extracted.repartition(numBuckets,
           element_at(typedLit(remap.toSeq), col("url_bucket") + 1))
       } else extracted
-    toWrite
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic").partitionBy("url_bucket")
+    bucketWrite(toWrite)
       // row-group buffer cap: every concurrent writer task holds up to
       // parquet.block.size of encoder buffers, so local[32] with the
       // default 128 MB peaks at ~4 GB of the 8 GB driver heap — the
@@ -405,19 +413,16 @@ object Extract {
       .parquet(s"$outDir/docs_clean")
 
     val processedBuckets = bucketAcc.value
-    val written = spark.read.parquet(s"$outDir/docs_clean")
-    // POSITIVE partition filter on the processed set: prunes to exactly
-    // this run's buckets (an incremental run over a few buckets no longer
-    // rewrites every sidecar partition in the dir)
-    val writtenRun = written.filter(
-      $"url_bucket".isin(processedBuckets.toSeq: _*))
-    // metrics from the WRITTEN columnar output (no recompute of the
-    // extraction; scans 4 narrow columns). Scoped to the buckets this run
-    // actually processed (accumulator set above — stale/done buckets'
-    // files are untouched and keep their metrics rows).
-    val docsClean = spark.read.parquet(s"$outDir/docs_clean")
+    // ONE read of the just-written docs_clean feeds the sidecars and the
+    // metrics rollup (no recompute of the extraction; the rollup scans 4
+    // narrow columns). It is read with the schema it was written with: a
+    // recrawl in which no page changed writes no file, and schema
+    // inference over an empty dir throws. The POSITIVE partition filter on
+    // the processed set prunes to exactly this run's buckets (stale/done
+    // buckets' files are untouched and keep their sidecar and metrics rows).
+    val written = spark.read.schema(toWrite.schema).parquet(s"$outDir/docs_clean")
       .filter($"url_bucket".isin(processedBuckets.toSeq: _*))
-    val metrics = docsClean.groupBy($"url_bucket").agg(
+    val metrics = written.groupBy($"url_bucket").agg(
       count(lit(1)).as("docs_parsed"),
       sum(when($"parse_failed", 1L).otherwise(0L)).as("parse_failures"),
       sum($"size").as("input_bytes"),
@@ -425,47 +430,26 @@ object Extract {
       .withColumn("bytes_stripped", $"input_bytes" - $"output_chars")
       .withColumn("run_id", lit(runId))
 
-    // all sidecars partitioned by url_bucket so a resume run's dynamic
-    // overwrite only touches the buckets it processed. The three sidecar
-    // writes and the metrics rollup are INDEPENDENT jobs over the
-    // just-written docs_clean (disjoint output dirs), so they are
+    // The three sidecar writes and the metrics rollup are INDEPENDENT jobs
+    // over the just-written docs_clean (disjoint output dirs), so they are
     // submitted concurrently from a small driver pool — the scheduler
     // back-fills executors freed by one job's write tail with the next
     // job's scan tasks instead of serializing four tails (guide §2.6;
     // job descriptions are thread-local, failures rethrow via Await).
-    // metrics is partitioned + dynamic overwrite like the others: a full
-    // overwrite would wipe completed buckets' metrics on resume (and an
-    // all-done idempotent rerun would empty the whole sidecar the
-    // BASELINE metric reads).
-    val sidecarJobs: Seq[(String, () => Unit)] = Seq(
-      "doc_meta" -> (() =>
-        writtenRun.select($"meta.*", $"url_bucket")
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic").partitionBy("url_bucket")
-          .parquet(s"$outDir/doc_meta")),
-      "links" -> (() =>
-        writtenRun.select($"url".as("src_url"), explode($"links").as("l"), $"url_bucket")
-          .select($"src_url", $"l.*", $"url_bucket")
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic").partitionBy("url_bucket")
-          .parquet(s"$outDir/links")),
-      "anchors" -> (() =>
-        writtenRun.select($"url", explode($"anchors").as("anchor_id"), $"url_bucket")
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic").partitionBy("url_bucket")
-          .parquet(s"$outDir/anchors")),
-      "metrics" -> (() =>
-        metrics.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic").partitionBy("url_bucket")
-          .parquet(s"$outDir/metrics")))
+    val sidecarJobs: Seq[(String, DataFrame)] = Seq(
+      "doc_meta" -> written.select($"meta.*", $"url_bucket"),
+      "links" -> written.select($"url".as("src_url"), explode($"links").as("l"), $"url_bucket")
+        .select($"src_url", $"l.*", $"url_bucket"),
+      "anchors" -> written.select($"url", explode($"anchors").as("anchor_id"), $"url_bucket"),
+      "metrics" -> metrics)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(sidecarJobs.size)
     try {
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val fs = sidecarJobs.map { case (nm, job) =>
+      val fs = sidecarJobs.map { case (nm, df) =>
         scala.concurrent.Future {
           spark.sparkContext.setJobDescription(s"extract.run sidecar: $nm")
-          job()
+          bucketWrite(df).parquet(s"$outDir/$nm")
         }
       }
       fs.foreach(f =>
@@ -476,7 +460,7 @@ object Extract {
     // Derived from the just-WRITTEN metrics parquet (tiny — one row per
     // bucket), not the unpersisted `metrics` frame: re-planning that frame
     // would re-run the whole groupBy scan a second time.
-    val writtenMetrics = spark.read.parquet(s"$outDir/metrics")
+    val writtenMetrics = spark.read.schema(metrics.schema).parquet(s"$outDir/metrics")
       .filter($"run_id" === runId)
     val seq = doneBuckets.size.toLong
     val ledger = writtenMetrics

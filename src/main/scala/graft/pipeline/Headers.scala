@@ -35,10 +35,9 @@ object Headers {
     * The batch is deduped to one row per url (deterministic max of the
     * header triple — a no-op on already-unique input), stored rows in the
     * touched buckets that the batch does NOT replace are carried forward,
-    * and only the touched buckets are rewritten (dynamic overwrite,
-    * writer-scoped — the session conf is never mutated). A partial-batch
-    * refresh therefore loses nothing: urls sharing a bucket with a
-    * refreshed url keep their stored headers. On an Iceberg deployment
+    * and only the touched buckets are rewritten ([[Extract.bucketWrite]]).
+    * A partial-batch refresh therefore loses nothing: urls sharing a bucket
+    * with a refreshed url keep their stored headers. On an Iceberg deployment
     * this whole function is `MERGE INTO`; the carried slice is
     * localCheckpoint-ed (touched buckets only — bounded by the batch's
     * bucket spread) so the write never reads the files it overwrites. */
@@ -76,11 +75,8 @@ object Headers {
           .select(fresh.columns.map(col): _*)
         fresh.unionByName(carry).localCheckpoint()
       }
-    merged
-      .repartition(numBuckets, col("url_bucket"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("url_bucket").parquet(outDir)
+    Extract.bucketWrite(merged.repartition(numBuckets, col("url_bucket")))
+      .parquet(outDir)
   }
 
   /** Keep CURRENT rows whose headers are new or changed vs `stored`

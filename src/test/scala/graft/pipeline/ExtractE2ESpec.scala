@@ -130,6 +130,22 @@ class ExtractE2ESpec extends AnyFunSuite {
     assert(kept.toSeq == Seq(u1), "null-payload re-capture must be treated as changed")
   }
 
+  test("recrawl with no changed page: empty summary, and the outDir stays usable") {
+    val prevOut = Files.createTempDirectory("graft_nochange_prev").toString
+    val snap = Extract.latestPerUrl(PagesGen.pages(spark, 40L))
+    Extract.run(spark, snap, prevOut, "nochange_prev")
+    val prev = spark.read.parquet(s"$prevOut/docs_clean")
+    // every page unchanged → the changed-only delta is empty, the docs_clean
+    // write leaves no file, and the read-back must not infer a schema
+    val out = Files.createTempDirectory("graft_nochange").toString
+    val s0 = Extract.run(spark, snap, out, "nochange_r1", prevSnapshot = Some(prev))
+    assert(s0 == Extract.RunSummary(0, 0, Extract.DefaultBuckets))
+    // a non-empty run into the same outDir afterwards still succeeds
+    val s1 = Extract.run(spark, snap, out, "nochange_r2")
+    assert(s1 == Extract.RunSummary(40, 0, Extract.DefaultBuckets))
+    assert(spark.read.parquet(s"$out/docs_clean").count() == 40)
+  }
+
   test("reused outDir, new runId: metrics/ledger/summary cover only THIS run's buckets") {
     val out = Files.createTempDirectory("graft_reuse").toString
     // run 1 fills many buckets
