@@ -121,7 +121,8 @@ object Dedup {
     * text per branch. The LSH paths' cache entry lives until the session
     * drops it (the frame is returned inside a lazy plan, so there is no
     * post-action hook to unpersist on); [[writeBandIndex]] unpersists after
-    * its two writes. */
+    * its two writes and [[nearDupDropList]] once its closure has
+    * materialized the pairs. */
   private def minhashSigs(docs: DataFrame, idCol: String, textCol: String,
                           numPerm: Int, shingleN: Int): DataFrame = {
     val spark = docs.sparkSession
@@ -277,13 +278,23 @@ object Dedup {
   def lshCandidatePairs(docs: DataFrame, idCol: String, textCol: String,
                         numPerm: Int = 64, bands: Int = 16,
                         shingleN: Int = 3, maxBucket: Int = 1000,
-                        metrics: Option[LshMetrics] = None): DataFrame = {
+                        metrics: Option[LshMetrics] = None): DataFrame =
+    lshCandidatesAndSigs(docs, idCol, textCol, numPerm, bands, shingleN,
+      maxBucket, metrics)._1
+
+  /** [[lshCandidatePairs]] plus the persisted (id, minhash) frame it reads,
+    * for a caller that knows when the pairs are materialized and can
+    * unpersist it then. */
+  private def lshCandidatesAndSigs(docs: DataFrame, idCol: String, textCol: String,
+                                   numPerm: Int, bands: Int, shingleN: Int,
+                                   maxBucket: Int, metrics: Option[LshMetrics]
+                                  ): (DataFrame, DataFrame) = {
     val m = metrics.getOrElse(new LshMetrics(docs.sparkSession))
     // minhash-only frame, computed ONCE and persisted (see [[minhashSigs]]
     // — the band branch and both signature-join branches all read it)
     val fps = minhashSigs(docs, idCol, textCol, numPerm, shingleN)
-    lshPairs(minhashBands(fps, bands).withColumn("is_new", lit(true)), fps,
-      numPerm, maxBucket, m)
+    (lshPairs(minhashBands(fps, bands).withColumn("is_new", lit(true)), fps,
+      numPerm, maxBucket, m), fps)
   }
 
   /** Smallest divisor of 64 that is >= maxHamming+1 (pigeonhole: a pair
@@ -646,11 +657,15 @@ object Dedup {
   def nearDupDropList(docs: DataFrame, idCol: String, textCol: String,
                       numPerm: Int = 32, bands: Int = 16,
                       minJaccard: Double = 0.7, maxIter: Int = 50): DataFrame = {
-    val cands = lshCandidatePairs(docs, idCol, textCol, numPerm, bands)
+    val (cands, sigs) = lshCandidatesAndSigs(docs, idCol, textCol, numPerm,
+      bands, shingleN = 3, maxBucket = 1000, metrics = None)
     val pairs = verifyJaccard(cands, docs, idCol, textCol)
       .filter(col("jaccard") >= minJaccard)
       .select(col("id_a"), col("id_b"))
-    connectedComponents(pairs, maxIter)
+    // the closure's first truncate materializes the pairs, so nothing reads
+    // the signatures once it returns
+    val components = try connectedComponents(pairs, maxIter) finally sigs.unpersist()
+    components
       .filter(col("id") =!= col("component"))
       .select(col("id").as("drop_id"), col("component").as("keeper"))
   }

@@ -1,7 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
+import scala.collection.mutable
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 /**
  * Relational link-graph operators (SURVEY §2.4/§2.5):
@@ -45,7 +49,29 @@ object LinkGraph {
    * formula with a graph-global importance signal; the reference orders
    * its queue by per-page features only, core/scraper.py:640-664).
    *
-   * Scale shape (the reason this is hand-rolled rather than GraphX):
+   * Two branches over ONE persisted distinct edge frame, chosen by one
+   * scalar aggregate over it (edge count and url bytes), so nothing is
+   * computed twice and no more than the budget ever reaches the driver:
+   *
+   * Size-gated local finish: a graph within `localFinishEdges` edges and
+   * [[LocalFinishUrlBytes]] of url bytes is collected once and iterated
+   * on the driver over primitive arrays (url→int index, out-degree array,
+   * one dangling-mass sum per iteration). At crawl-snapshot sizes the
+   * distributed loop is bound by job latency, not work (3 iterations over
+   * 60k edges: ~33 Spark jobs for milliseconds of arithmetic) — the
+   * "contract distributed, finish small" shape of
+   * [[Dedup.connectedComponents]]. Driver allocation at the caps
+   * (E = 1M edges, B = 64 MB of src+dst url bytes): the collect holds the
+   * encoded rows (~88 B/edge of row headers and offsets + B ≈ 152 MB)
+   * while it decodes them into (src, dst) tuples (~104 B/edge of tuple
+   * and String headers + B, Latin-1 compact strings ≈ 168 MB), a
+   * transient peak of ~320 MB; the iteration then needs the url index
+   * (≤ 2E nodes × ~48 B ≈ 96 MB) and int/double arrays (8 B/edge +
+   * 28 B/node ≈ 64 MB) — a CONSTANT independent of corpus size. The
+   * returned local frame holds one (url, rank) row per node. Pass
+   * `localFinishEdges` = 0 to force the distributed path.
+   *
+   * Distributed path (the reason this is hand-rolled rather than GraphX):
    *  - every shuffle carries (url, double) pairs only — payloads never
    *    enter the iteration;
    *  - the per-destination contribution sum is a map-side-combinable
@@ -64,18 +90,22 @@ object LinkGraph {
    *  - the dangling-mass redistribution is a scalar aggregate per
    *    iteration (one double to the driver, independent of graph size).
    *
-   * Semantics: standard damped PageRank on the DISTINCT simple graph
-   * (self-loops and duplicate edges dropped); nodes = every url appearing
-   * as src or dst; dangling mass (nodes with no out-links — most dst-only
-   * urls in a closed-world crawl snapshot) is redistributed uniformly, so
-   * each iteration's ranks sum to exactly 1 up to float error.
+   * Semantics (both branches, same floating-point expression per node):
+   * standard damped PageRank on the DISTINCT simple graph (self-loops,
+   * duplicate edges and null endpoints dropped); nodes = every url
+   * appearing as src or dst; dangling mass (nodes with no out-links —
+   * most dst-only urls in a closed-world crawl snapshot) is redistributed
+   * uniformly, so each iteration's ranks sum to exactly 1 up to float
+   * error. An empty graph returns an empty (url, rank) frame.
    *
    * edges: first two columns are (src, dst). Returns (url, rank).
    */
   def pageRank(edges: DataFrame, iterations: Int = 3,
-               damping: Double = 0.85): DataFrame = {
+               damping: Double = 0.85,
+               localFinishEdges: Long = 1_000_000L): DataFrame = {
     require(iterations >= 0, s"iterations must be >= 0: $iterations")
     val spark = edges.sparkSession
+    import spark.implicits._
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e = edges
       .select(col(edges.columns(0)).as("src"), col(edges.columns(1)).as("dst"))
@@ -83,21 +113,69 @@ object LinkGraph {
         col("src") =!= col("dst"))
       .distinct()
       .persist(MEMORY_AND_DISK)
+    // (edge count, url bytes): per-task partial sums merged on the driver —
+    // a SQL global aggregate would add a single-partition exchange, which
+    // under AQE is one more job
+    val (m, urlBytes) = e
+      .select(octet_length(col("src")).cast("long") + octet_length(col("dst")))
+      .as[Long].rdd
+      .aggregate((0L, 0L))((a, b) => (a._1 + 1, a._2 + b),
+        (x, y) => (x._1 + y._1, x._2 + y._2))
+    if (m == 0L) {
+      e.unpersist()
+      spark.createDataFrame(java.util.List.of[Row](), RankSchema)
+    } else if (localFinishEdges > 0 && m <= localFinishEdges &&
+        urlBytes <= LocalFinishUrlBytes) {
+      val es = e.as[(String, String)].collect()
+      e.unpersist()
+      localPageRank(spark, es, iterations, damping)
+    } else distributedPageRank(e, iterations, damping)
+  }
+
+  /** Url-byte cap of [[pageRank]]'s driver finish (src + dst bytes summed
+    * over the distinct edges); the arithmetic is in its scaladoc. */
+  private val LocalFinishUrlBytes = 64L << 20
+
+  private val RankSchema = StructType(Seq(
+    StructField("url", StringType), StructField("rank", DoubleType)))
+
+  /** [[pageRank]]'s driver finish over the collected distinct edges. */
+  private def localPageRank(spark: SparkSession, es: Array[(String, String)],
+                            iterations: Int, damping: Double): DataFrame = {
+    val index = mutable.HashMap.empty[String, Int]
+    val urls = ArrayBuffer.empty[String]
+    def node(u: String): Int = index.getOrElseUpdate(u, { urls += u; urls.length - 1 })
+    val src = new Array[Int](es.length)
+    val dst = new Array[Int](es.length)
+    var k = 0
+    while (k < es.length) { src(k) = node(es(k)._1); dst(k) = node(es(k)._2); k += 1 }
+    val n = urls.length
+    val outdeg = new Array[Int](n)
+    src.foreach(s => outdeg(s) += 1)
+    var rank = Array.fill(n)(1.0 / n)
+    for (_ <- 1 to iterations) {
+      var dang = 0.0
+      var v = 0
+      while (v < n) { if (outdeg(v) == 0) dang += rank(v); v += 1 }
+      val c = new Array[Double](n)
+      k = 0
+      while (k < src.length) { c(dst(k)) += rank(src(k)) / outdeg(src(k)); k += 1 }
+      // the distributed branch's per-node expression, term for term
+      rank = Array.tabulate(n)(i => (1.0 - damping) / n + damping * (c(i) + dang / n))
+    }
+    spark.createDataFrame(urls.indices.map(v => Row(urls(v), rank(v))).asJava, RankSchema)
+  }
+
+  /** [[pageRank]]'s checkpointed loop over the persisted, non-empty
+    * distinct edge frame `e` (unpersisted here). */
+  private def distributedPageRank(e: DataFrame, iterations: Int,
+                                  damping: Double): DataFrame = {
+    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val nodes = e.select(col("src").as("url"))
       .union(e.select(col("dst").as("url")))
       .distinct()
       .persist(MEMORY_AND_DISK)
     val n = nodes.count().toDouble
-    if (n == 0) {
-      e.unpersist(); nodes.unpersist()
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("url",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("rank",
-            org.apache.spark.sql.types.DoubleType))))
-    }
     // out-degree of the simple graph; dst-only urls have no row here
     val deg = e.groupBy(col("src"))
       .agg(count(lit(1)).cast("double").as("outdeg"))

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, DataFrameWriter, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.clean.{Cleaner, Sanitize}
 import graft.html.{HtmlParser, Serializer}
@@ -74,13 +74,23 @@ object Extract {
 
   /** url-hash bucket — EXACT parity with the SQL `pmod(xxhash64(url), n)`
     * (same XxHash64, seed 42, over UTF-8 bytes), so typed-map outputs and
-    * relational bucket filters never disagree. */
+    * relational bucket filters never disagree. A null url has no hash
+    * here; [[extractPage]] files it under bucket 0, which [[bucketCol]]
+    * mirrors. */
   def urlBucket(url: String, numBuckets: Int): Int = {
     val h = org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
       org.apache.spark.unsafe.types.UTF8String.fromString(url),
       org.apache.spark.sql.types.StringType, 42L)
     (((h % numBuckets) + numBuckets) % numBuckets).toInt
   }
+
+  /** The relational twin of the bucket [[extractPage]] assigns (a bigint
+    * column): `pmod(xxhash64(url), n)`, and 0 for a null url. Plain SQL
+    * would file a null url under `pmod(42, n)` — xxhash64(NULL) is its
+    * seed — so a resume filter on it would re-extract (or silently drop)
+    * that row against the wrong bucket's done mark. */
+  private def bucketCol(url: Column, numBuckets: Int): Column =
+    when(url.isNull, lit(0L)).otherwise(pmod(xxhash64(url), lit(numBuckets)))
 
   /** Per-row extraction — pure, total (failures captured, never thrown).
     * Content kind dispatch mirrors the reference's MIME routing
@@ -99,12 +109,15 @@ object Extract {
     try {
       staged("decode") { require(row.html != null, "null html payload") }
       val (kind, text, cleanedHtml, meta, links, anchors) = dispatch(row, pivotYear)
+      // an edge is internal when its netloc is the source's: parsed once per
+      // page, and only for a page with edges
+      val srcNetloc = if (links.isEmpty) null else PyUrl.urlparse(row.url).netloc
       ExtractedPage(
         DocClean(row.url, row.warc_ts, text, cleanedHtml, sha, size, kind,
           bucket, parse_failed = false, null, null),
         meta.getOrElse(emptyMeta),
         links.map(e => LinkEdge(e.dstUrl, e.kind, e.srcTag, e.anchor,
-          isInternal(row.url, e.dstUrl))),
+          PyUrl.urlparse(e.dstUrl).netloc == srcNetloc)),
         anchors)
     } catch {
       case e: Throwable => // failure isolation: row-level, never task-level
@@ -168,9 +181,6 @@ object Extract {
     }
     new String(out)
   }
-
-  private def isInternal(src: String, dst: String): Boolean =
-    PyUrl.urlparse(src).netloc == PyUrl.urlparse(dst).netloc
 
   private def dispatch(row: PageRow, pivotYear: Int): (String, String, String,
       Option[DocMetaRow], Seq[graft.links.Edge], Seq[String]) = {
@@ -254,7 +264,7 @@ object Extract {
       val placed =
         if (alignDupsTo > 0)
           dedupedDups.repartition(alignDupsTo,
-            pmod(xxhash64($"url"), lit(alignDupsTo))).as[PageRow]
+            bucketCol($"url", alignDupsTo)).as[PageRow]
         else dedupedDups
       uniques.union(placed)
     } else latestPerUrlWindow(pages)
@@ -347,11 +357,9 @@ object Extract {
       input = input.join(broadcast(bl.toDF("b_url")),
         input("url") === $"b_url", "left_anti").as[PageRow]
     }
-    if (doneBuckets.nonEmpty) // only on resume — the extra projection+filter
-      input = input.withColumn("__bucket", // costs a full decode pass otherwise
-        pmod(xxhash64($"url"), lit(numBuckets)).cast("int"))
-        .filter(!$"__bucket".isin(doneBuckets.toSeq: _*))
-        .drop("__bucket").as[PageRow]
+    if (doneBuckets.nonEmpty) // only on resume — the extra filter costs a
+      input = input.filter( // full decode pass otherwise
+        !bucketCol($"url", numBuckets).isin(doneBuckets.toSeq: _*))
 
     val deduped = latestPerUrl(input,
       alignDupsTo = if (repartitionForWrite) 0 else numBuckets)

@@ -3,6 +3,7 @@ package graft.ops
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.pipeline.SparkTestBase
+import org.apache.spark.sql.graftbridge.CacheEntries
 
 /** Dedup operators over a synthetic corpus with PLANTED exact and near
   * duplicates (testdata documents are all unique, so the operators' recall
@@ -419,6 +420,14 @@ class DedupSpec extends AnyFunSuite {
     assert(Seq(101L, 102L, 103L).forall(drops(_) == 100L))
     // unique docs are never dropped
     assert((0L until 40L).forall(!drops.contains(_)))
+  }
+
+  test("nearDupDropList releases its minhash signature cache") {
+    val before = CacheEntries(spark)
+    val drops = Dedup.nearDupDropList(docs, "doc_id", "text",
+      numPerm = 64, bands = 16, minJaccard = 0.5).collect()
+    assert(drops.nonEmpty)
+    assert(CacheEntries(spark) == before)
   }
 
   // ---- SemDeDup (semantic dedup over embedding clusters) ----

@@ -213,6 +213,31 @@ class ExtractE2ESpec extends AnyFunSuite {
     assert(mIdem.agg(sum($"docs_parsed")).as[Long].head() == N)
   }
 
+  test("resume with a null-url row: the done set is read against the row's bucket 0") {
+    // extractPage files a null url under bucket 0; SQL pmod(xxhash64(NULL), 16)
+    // is pmod(42, 16) = 10. Either done set must leave docs_clean as a full run
+    // wrote it: {0} skips the null row with its bucket, {10} re-extracts it.
+    val ts = new java.sql.Timestamp(0L)
+    val pages = PagesGen.pages(spark, 60L).union(spark.createDataset(Seq(
+      PageRow(null, ts, PagesGen.htmlOf(1L, 7L).getBytes("UTF-8"), null, "en"))))
+    for (done <- Seq(0, 10)) {
+      val out = Files.createTempDirectory(s"graft_resume_null$done").toString
+      Extract.run(spark, pages, out, "nullA")
+      def byBucket() = spark.read.parquet(s"$out/docs_clean")
+        .groupBy($"url_bucket").count().as[(Int, Long)].collect().toMap
+      val before = byBucket()
+      assert(before.contains(0) && before.contains(10))
+      Seq(done).toDF("url_bucket")
+        .select(lit("nullB").as("run_id"), $"url_bucket", lit("done").as("status"),
+          lit(0L).as("docs"), lit(0L).as("completed_seq"))
+        .write.mode("append").parquet(s"$out/progress")
+      Extract.run(spark, pages, out, "nullB")
+      assert(byBucket() == before, s"done set {$done}")
+      assert(spark.read.parquet(s"$out/docs_clean")
+        .filter($"url".isNull && $"url_bucket" === 0).count() == 1, s"done set {$done}")
+    }
+  }
+
   test("bucket-aligned input: exchange-free write path produces identical outputs") {
     val in = Files.createTempDirectory("graft_aligned_in").toString + "/pages"
     PagesGen.pages(spark, 80L)
