@@ -230,11 +230,11 @@ object Bench {
     // partitioned output without shuffling extracted payloads) ----
     val alignedRuns = scala.collection.mutable.ArrayBuffer.empty[Double]
     if (runHeadline && sys.env.getOrElse("SPARK_GRAFT_BENCH_ALIGNED", "") == "1") {
-      import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+      import org.apache.spark.sql.functions.col
       val alignedPath = s"$benchRoot/pages_aligned"
       if (!new java.io.File(s"$alignedPath/_SUCCESS").exists()) {
         spark.read.parquet(pagesPath)
-          .withColumn("url_bucket", pmod(xxhash64(col("url")), lit(nBuckets)).cast("int"))
+          .withColumn("url_bucket", graft.pipeline.Extract.bucketCol(col("url"), nBuckets).cast("int"))
           .repartition(nBuckets, col("url_bucket"))
           .write.mode("overwrite").partitionBy("url_bucket").parquet(alignedPath)
       }

@@ -1,11 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
-import scala.jdk.CollectionConverters._
 
 /**
  * Relational link-graph operators (SURVEY §2.4/§2.5):
@@ -53,23 +51,30 @@ object LinkGraph {
    * scalar aggregate over it (edge count and url bytes), so nothing is
    * computed twice and no more than the budget ever reaches the driver:
    *
-   * Size-gated local finish: a graph within `localFinishEdges` edges and
-   * [[LocalFinishUrlBytes]] of url bytes is collected once and iterated
-   * on the driver over primitive arrays (url→int index, out-degree array,
-   * one dangling-mass sum per iteration). At crawl-snapshot sizes the
-   * distributed loop is bound by job latency, not work (3 iterations over
-   * 60k edges: ~33 Spark jobs for milliseconds of arithmetic) — the
-   * "contract distributed, finish small" shape of
-   * [[Dedup.connectedComponents]]. Driver allocation at the caps
-   * (E = 1M edges, B = 64 MB of src+dst url bytes): the collect holds the
-   * encoded rows (~88 B/edge of row headers and offsets + B ≈ 152 MB)
-   * while it decodes them into (src, dst) tuples (~104 B/edge of tuple
-   * and String headers + B, Latin-1 compact strings ≈ 168 MB), a
-   * transient peak of ~320 MB; the iteration then needs the url index
-   * (≤ 2E nodes × ~48 B ≈ 96 MB) and int/double arrays (8 B/edge +
-   * 28 B/node ≈ 64 MB) — a CONSTANT independent of corpus size. The
-   * returned local frame holds one (url, rank) row per node. Pass
-   * `localFinishEdges` = 0 to force the distributed path.
+   * Size-gated local finish: a graph within [[LocalFinishEdges]] distinct
+   * edges and [[LocalFinishUrlBytes]] of src + dst url bytes is collected
+   * once and iterated on the driver over primitive arrays (url→int index,
+   * out-degree array, one dangling-mass sum per iteration). At
+   * crawl-snapshot sizes the distributed loop is bound by job latency, not
+   * work (3 iterations over 60k edges: ~33 Spark jobs for milliseconds of
+   * arithmetic) — the "contract distributed, finish small" shape of
+   * [[Dedup.connectedComponents]]. Driver memory at the caps (E = 500k
+   * edges, B = 32 MB), worst case N = 2E = 1M nodes, 32-byte urls:
+   *  - estimate, phase by phase (no two overlap): the collect holds the
+   *    decoded rows (~80 B/edge + B) while it builds the (src, dst) tuples
+   *    (~100 B/edge + B), ~150 MB; [[indexEdges]] holds the tuples, the
+   *    url→int map (~56 B/node) and the endpoint arrays, ~140 MB, and
+   *    drops them on return; the output holds the url strings (~40 B/node
+   *    + B) while it encodes the result rows (~85 B/node + B), ~190 MB;
+   *  - measured (JDK 17, local[2], a full GC every 50 ms during the call):
+   *    the live heap peaked 307 MB above the session's steady state, the
+   *    edge-frame build and cache included; at twice the caps (1M edges,
+   *    64 MB) it peaked 606 MB above it, so the caps were halved;
+   *  - retained: the returned local frame keeps one encoded (url, rank)
+   *    row per node, ~117 B/node with 32-byte urls (236 MB measured for
+   *    2M nodes, so ~118 MB at the caps) for as long as the caller holds
+   *    the frame.
+   * All of it is a CONSTANT independent of corpus size.
    *
    * Distributed path (the reason this is hand-rolled rather than GraphX):
    *  - every shuffle carries (url, double) pairs only — payloads never
@@ -101,8 +106,13 @@ object LinkGraph {
    * edges: first two columns are (src, dst). Returns (url, rank).
    */
   def pageRank(edges: DataFrame, iterations: Int = 3,
-               damping: Double = 0.85,
-               localFinishEdges: Long = 1_000_000L): DataFrame = {
+               damping: Double = 0.85): DataFrame =
+    pageRank(edges, iterations, damping, LocalFinishEdges)
+
+  /** [[pageRank]] with an explicit driver-finish edge budget — the specs'
+    * seam for pinning a branch (0 forces the distributed loop). */
+  private[ops] def pageRank(edges: DataFrame, iterations: Int, damping: Double,
+                            localFinishEdges: Long): DataFrame = {
     require(iterations >= 0, s"iterations must be >= 0: $iterations")
     val spark = edges.sparkSession
     import spark.implicits._
@@ -123,32 +133,24 @@ object LinkGraph {
         (x, y) => (x._1 + y._1, x._2 + y._2))
     if (m == 0L) {
       e.unpersist()
-      spark.createDataFrame(java.util.List.of[Row](), RankSchema)
-    } else if (localFinishEdges > 0 && m <= localFinishEdges &&
-        urlBytes <= LocalFinishUrlBytes) {
-      val es = e.as[(String, String)].collect()
-      e.unpersist()
-      localPageRank(spark, es, iterations, damping)
-    } else distributedPageRank(e, iterations, damping)
+      Seq.empty[UrlRank].toDF()
+    } else if (m <= localFinishEdges && urlBytes <= LocalFinishUrlBytes)
+      localPageRank(e, iterations, damping)
+    else distributedPageRank(e, iterations, damping)
   }
 
-  /** Url-byte cap of [[pageRank]]'s driver finish (src + dst bytes summed
-    * over the distinct edges); the arithmetic is in its scaladoc. */
-  private val LocalFinishUrlBytes = 64L << 20
+  /** Caps of [[pageRank]]'s driver finish: distinct edges, and src + dst
+    * url bytes summed over them. The arithmetic is in its scaladoc. */
+  private val LocalFinishEdges = 500_000L
+  private val LocalFinishUrlBytes = 32L << 20
 
-  private val RankSchema = StructType(Seq(
-    StructField("url", StringType), StructField("rank", DoubleType)))
-
-  /** [[pageRank]]'s driver finish over the collected distinct edges. */
-  private def localPageRank(spark: SparkSession, es: Array[(String, String)],
-                            iterations: Int, damping: Double): DataFrame = {
-    val index = mutable.HashMap.empty[String, Int]
-    val urls = ArrayBuffer.empty[String]
-    def node(u: String): Int = index.getOrElseUpdate(u, { urls += u; urls.length - 1 })
-    val src = new Array[Int](es.length)
-    val dst = new Array[Int](es.length)
-    var k = 0
-    while (k < es.length) { src(k) = node(es(k)._1); dst(k) = node(es(k)._2); k += 1 }
+  /** [[pageRank]]'s driver finish over the persisted, non-empty distinct
+    * edge frame `e` (unpersisted here). Returns a local (url, rank) frame. */
+  private def localPageRank(e: DataFrame, iterations: Int,
+                            damping: Double): DataFrame = {
+    val spark = e.sparkSession
+    import spark.implicits._
+    val (urls, src, dst) = indexEdges(e)
     val n = urls.length
     val outdeg = new Array[Int](n)
     src.foreach(s => outdeg(s) += 1)
@@ -158,12 +160,41 @@ object LinkGraph {
       var v = 0
       while (v < n) { if (outdeg(v) == 0) dang += rank(v); v += 1 }
       val c = new Array[Double](n)
-      k = 0
+      var k = 0
       while (k < src.length) { c(dst(k)) += rank(src(k)) / outdeg(src(k)); k += 1 }
       // the distributed branch's per-node expression, term for term
       rank = Array.tabulate(n)(i => (1.0 - damping) / n + damping * (c(i) + dang / n))
     }
-    spark.createDataFrame(urls.indices.map(v => Row(urls(v), rank(v))).asJava, RankSchema)
+    val finalRank = rank
+    // encoded row by row straight from the two arrays (no intermediate
+    // collection of pairs), and already named (url, rank): a renaming
+    // projection over a local relation is folded into a second copy of
+    // every row by the optimizer
+    val rows = new IndexedSeq[UrlRank] {
+      def length: Int = n
+      def apply(v: Int): UrlRank = UrlRank(urls(v), finalRank(v))
+    }
+    spark.createDataset(rows).toDF()
+  }
+
+  // not `private`: generated code cannot reach a private nested class
+  private[ops] case class UrlRank(url: String, rank: Double)
+
+  /** Collects the distinct edges `e` (and unpersists it) into int endpoint
+    * arrays over a url table. Its own method so that the collected tuples
+    * and the url→int index are garbage once it returns. */
+  private def indexEdges(e: DataFrame): (Array[String], Array[Int], Array[Int]) = {
+    import e.sparkSession.implicits._
+    val es = e.as[(String, String)].collect()
+    e.unpersist()
+    val index = mutable.HashMap.empty[String, Int]
+    val urls = ArrayBuffer.empty[String]
+    def node(u: String): Int = index.getOrElseUpdate(u, { urls += u; urls.length - 1 })
+    val src = new Array[Int](es.length)
+    val dst = new Array[Int](es.length)
+    var k = 0
+    while (k < es.length) { src(k) = node(es(k)._1); dst(k) = node(es(k)._2); k += 1 }
+    (urls.toArray, src, dst)
   }
 
   /** [[pageRank]]'s checkpointed loop over the persisted, non-empty

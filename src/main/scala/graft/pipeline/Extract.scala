@@ -88,8 +88,9 @@ object Extract {
     * column): `pmod(xxhash64(url), n)`, and 0 for a null url. Plain SQL
     * would file a null url under `pmod(42, n)` — xxhash64(NULL) is its
     * seed — so a resume filter on it would re-extract (or silently drop)
-    * that row against the wrong bucket's done mark. */
-  private def bucketCol(url: Column, numBuckets: Int): Column =
+    * that row against the wrong bucket's done mark. The one SQL spelling
+    * of the bucket: every writer and filter of a `url_bucket` uses it. */
+  private[graft] def bucketCol(url: Column, numBuckets: Int): Column =
     when(url.isNull, lit(0L)).otherwise(pmod(xxhash64(url), lit(numBuckets)))
 
   /** Per-row extraction — pure, total (failures captured, never thrown).

@@ -49,7 +49,7 @@ object Headers {
       .groupBy(col("url"))
       .agg(max(struct(headerCols.map(col): _*)).as("__h"))
       .select(col("url") +: headerCols.map(c => col(s"__h.$c").as(c)): _*)
-      .withColumn("url_bucket", pmod(xxhash64(col("url")), lit(numBuckets)).cast("int"))
+      .withColumn("url_bucket", Extract.bucketCol(col("url"), numBuckets).cast("int"))
     // the dynamic-overwrite committer writes no _SUCCESS marker — detect
     // an existing sidecar by its partition directories, through Hadoop FS
     // so scheme-qualified paths (file://, hdfs://, s3a://) are seen too

@@ -188,7 +188,7 @@ object PagesGen {
                        numBuckets: Int = 16): Unit = {
     import org.apache.spark.sql.functions._
     pages(spark, n)
-      .withColumn("url_bucket", pmod(xxhash64(col("url")), lit(numBuckets)).cast("int"))
+      .withColumn("url_bucket", Extract.bucketCol(col("url"), numBuckets).cast("int"))
       .write.mode("overwrite").partitionBy("url_bucket").parquet(path)
   }
 }

@@ -34,12 +34,12 @@ class CheckpointsSpec extends AnyFunSuite {
   test("pageRank results are bitwise identical under reliable checkpointing") {
     val edges = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("d", "a"))
       .toDF("src", "dst")
-    val base = LinkGraph.pageRank(edges, iterations = 2, localFinishEdges = 0).collect()
+    val base = LinkGraph.pageRank(edges, 2, 0.85, localFinishEdges = 0L).collect()
       .map(r => (r.getString(0), r.getDouble(1))).toMap
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt2").toString
     spark.conf.set(Checkpoints.ConfKey, dir)
     try {
-      val rel = LinkGraph.pageRank(edges, iterations = 2, localFinishEdges = 0).collect()
+      val rel = LinkGraph.pageRank(edges, 2, 0.85, localFinishEdges = 0L).collect()
         .map(r => (r.getString(0), r.getDouble(1))).toMap
       assert(rel.keySet == base.keySet)
       rel.foreach { case (k, v) => assert(v == base(k), k) }

@@ -10,8 +10,9 @@ import org.apache.spark.sql.graftbridge.CacheEntries
   * Map-based math), plus the analytic invariants — ranks sum to 1 every
   * iteration because dangling mass is redistributed, hubs outrank leaves,
   * and input hygiene (self-loops, duplicate edges, nulls) is applied.
-  * Every case runs on both branches: the driver finish (default budget)
-  * and the checkpointed distributed loop (`localFinishEdges` = 0). */
+  * Every case runs on both branches, through the package-private
+  * overload that takes the driver-finish budget: the driver finish and
+  * the checkpointed distributed loop (`localFinishEdges` = 0). */
 class PageRankSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestBase.spark
@@ -36,8 +37,8 @@ class PageRankSpec extends AnyFunSuite {
     r
   }
 
-  /** (branch name, localFinishEdges): the default budget finishes these
-    * small graphs on the driver; 0 forces the distributed loop. */
+  /** (branch name, localFinishEdges): 1M finishes these small graphs on
+    * the driver; 0 forces the distributed loop. */
   private val branches = Seq("local" -> 1_000_000L, "distributed" -> 0L)
 
   /** Registers `name` on the driver finish and `name (distributed loop)`
@@ -49,8 +50,7 @@ class PageRankSpec extends AnyFunSuite {
 
   private def run(edges: Seq[(String, String)], iters: Int,
                   localFinishEdges: Long): Map[String, Double] =
-    LinkGraph.pageRank(edges.toDF("src_url", "dst_url"), iters,
-      localFinishEdges = localFinishEdges)
+    LinkGraph.pageRank(edges.toDF("src_url", "dst_url"), iters, 0.85, localFinishEdges)
       .as[(String, Double)].collect().toMap
 
   /** b and c both point at d (hub); d is dangling; a self-loop and a
@@ -73,7 +73,7 @@ class PageRankSpec extends AnyFunSuite {
 
   test("the budget is inclusive: E edges finish locally at E, distribute at E-1") {
     def leaves(budget: Long): Seq[String] =
-      LinkGraph.pageRank(hand.toDF("src_url", "dst_url"), 3, localFinishEdges = budget)
+      LinkGraph.pageRank(hand.toDF("src_url", "dst_url"), 3, 0.85, budget)
         .queryExecution.optimizedPlan.collectLeaves().map(_.getClass.getSimpleName)
     assert(leaves(5L) == Seq("LocalRelation"), leaves(5L))
     assert(leaves(4L) == Seq("LogicalRDD"), leaves(4L))
@@ -113,8 +113,7 @@ class PageRankSpec extends AnyFunSuite {
 
   onBothBranches("empty edge set returns an empty (url, rank) frame") { budget =>
     val out = LinkGraph.pageRank(
-      Seq.empty[(String, String)].toDF("src_url", "dst_url"), 3,
-      localFinishEdges = budget)
+      Seq.empty[(String, String)].toDF("src_url", "dst_url"), 3, 0.85, budget)
     assert(out.columns.toSeq == Seq("url", "rank"))
     assert(out.count() == 0)
   }
@@ -122,7 +121,7 @@ class PageRankSpec extends AnyFunSuite {
   onBothBranches("null endpoints are dropped, not propagated") { budget =>
     val edges = Seq(("a", "b"), ("a", null), (null, "b"))
       .toDF("src_url", "dst_url")
-    val got = LinkGraph.pageRank(edges, 2, localFinishEdges = budget)
+    val got = LinkGraph.pageRank(edges, 2, 0.85, budget)
       .as[(String, Double)].collect().toMap
     assert(got.keySet == Set("a", "b"))
     assert(math.abs(got.values.sum - 1.0) < 1e-12)
