@@ -945,7 +945,7 @@ object SparkEntry {
       // to order-independent BIGINTs); the oracle recomputes the whole
       // index + scoring node-for-node in DuckDB
       graft.ops.Retrieval.bm25TopK(t(s, dir, "documents"),
-        "doc_id", "text", retrievalQueries, k = 10, salt = 8)),
+        "doc_id", "text", retrievalQueries, k = 10)),
     "q_embedding_drift" -> ((s, dir) =>
       // per-label exact quantized centroids + the 10 lowest-affinity
       // vectors per label (ops.Drift); the oracle re-derives the

@@ -1,8 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /**
  * Lexical retrieval over the corpus — the inverted-index primitive behind
@@ -25,60 +27,55 @@ import org.apache.spark.sql.functions._
  * temperatureSample precedent).
  *
  * Scale shape at the design point:
- *   - term frequencies: one explode + map-side-combinable agg; the
- *     per-doc length rides a doc-keyed window, never a self-join,
- *   - query terms and their document frequencies broadcast (a query set
- *     is human-sized); the corpus-sized tf table is the probe side of a
- *     broadcast hash join — the full document-frequency table is never
- *     shuffled against it,
- *   - the global (N, total-token) scalar broadcasts,
- *   - top-k per query runs the exact salted two-stage top-k
- *     ([[Skew.saltedTopKPerKey]]) — a query matching half the corpus
- *     never funnels through one task.
+ *   - one explode and one map-side-combined (doc_id, term) count per
+ *     call; every statistic reads it through its tf column, so AQE
+ *     reuses its one exchange (a branch pruning tf or pushing a term
+ *     filter under it would re-tokenize; RetrievalSpec pins the plan),
+ *   - bm25TopK counts non-query tokens under a null term: a task ships
+ *     one row per (doc, query-term) hit plus one per doc,
+ *   - query terms with their dfs, and the (N, total-token) scalar,
+ *     broadcast (a query set is human-sized),
+ *   - top-k per query is Spark's bounded CollectTopK aggregate: a task
+ *     sends at most k rows per query, so a query matching half the
+ *     corpus never funnels through one task.
  */
 object Retrieval {
 
-  /** @param queries (query_id, terms); terms are matched post-lowercase.
-    * Emits (query_id, doc_id, score, rnk) — top `k` docs per query by
-    * (score DESC, doc_id ASC). Scores are the quantized-integer BM25
-    * described above. */
-  /** Shared index statistics: (term frequencies + per-doc lengths,
-    * document frequencies, the global (N, total-tokens) scalar). */
-  private def termStats(docs: DataFrame, idCol: String, textCol: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val toks = docs.select(col(idCol).as("doc_id"),
-        explode(split(lower(coalesce(col(textCol), lit(""))), "\\s+"))
-          .as("term"))
-      .filter(length(col("term")) > 0)
-    val tf = toks.groupBy(col("doc_id"), col("term"))
+  /** The one tokenization: (doc_id, term, tf) counts of the non-empty
+    * lowercase whitespace tokens, each mapped by `term` first. */
+  private def termCounts(docs: DataFrame, idCol: String, textCol: String,
+                         term: Column => Column = identity) =
+    docs.select(col(idCol).as("doc_id"),
+        explode(split(lower(coalesce(col(textCol), lit(""))), "\\s+")).as("t"))
+      .filter(length(col("t")) > 0)
+      .groupBy(col("doc_id"), term(col("t")).as("term"))
       .agg(count(lit(1)).as("tf"))
-    val tfdl = tf.withColumn("dl",
-      sum(col("tf")).over(Window.partitionBy(col("doc_id"))))
-    val dfq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    // global scalar DERIVED FROM tf (n = docs with ≥1 token, tt = Σtf =
-    // total tokens — arithmetically identical to aggregating the raw
-    // token explode): all three branches now share the one tf exchange
-    // subtree, which AQE's stage reuse materializes once — the previous
-    // toks-level aggregate re-tokenized the whole corpus for two numbers
-    val g = tf.agg(countDistinct(col("doc_id")).as("n"),
-      sum(col("tf")).as("tt"))
-    (tfdl, dfq, g)
-  }
 
   /** The rational IDF shared by both scorers (scaladoc above). */
-  private def rationalIdf(nD: org.apache.spark.sql.Column,
-                          dfD: org.apache.spark.sql.Column) =
+  private def rationalIdf(nD: Column, dfD: Column) =
     ((nD - dfD) + lit(0.5)) / (dfD + lit(0.5))
 
+  /** @param queries (query_id, terms); terms are matched post-lowercase.
+    * Emits (query_id, doc_id, score, rnk) — top `k` (≥ 1) docs per query
+    * by (score DESC, doc_id ASC, null first): the order of (-score,
+    * doc_id), exact since scores (the quantized BM25 above) are sums of
+    * floor(x · 2^20), x ≥ 0 (> -1 if a null id lifts df to N + 1). */
   def bm25TopK(docs: DataFrame, idCol: String, textCol: String,
-               queries: Seq[(String, Seq[String])], k: Int = 10,
-               salt: Int = 8): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val (tfdl, dfq, g) = termStats(docs, idCol, textCol)
-    val qdf = queries.flatMap { case (q, ts) => ts.map(t => (q, t)) }
-      .toDF("query_id", "term")
-    val qd = broadcast(broadcast(qdf).join(dfq, Seq("term")))
+               queries: Seq[(String, Seq[String])], k: Int = 10): DataFrame = {
+    require(k > 0, s"k must be positive, got $k")
+    val qdf = docs.sparkSession.createDataFrame(queries.flatMap {
+      case (q, ts) => ts.map(t => (q, t)) }).toDF("query_id", "term")
+    val tf = termCounts(docs, idCol, textCol,
+      t => when(t.isin(queries.flatMap(_._2): _*), t))
+    val hits = tf
+      .withColumn("dl", sum(col("tf")).over(Window.partitionBy(col("doc_id"))))
+      .filter(col("term").isNotNull)
+    // df over tf (> 0) keeps the shared aggregate whole; joining null-safely
+    // pushes no isnotnull(term) under its exchange (hits have no null term)
+    val dfq = tf.groupBy(col("term")).agg(count_if(col("tf") > 0).as("df"))
+    val g = tf.agg(countDistinct(col("doc_id")).as("n"), sum(col("tf")).as("tt"))
+    val qd = broadcast(broadcast(qdf).join(dfq, qdf("term") <=> dfq("term"))
+      .drop(dfq("term")))
     // every node below mirrors the oracle SQL exactly: same tree, same
     // parenthesization, float literals only where exactly representable
     // or correctly rounded identically by both parsers (1.2, 0.75, 0.5)
@@ -91,14 +88,18 @@ object Retrieval {
     val tfs = (tfD * (lit(1.2) + lit(1.0))) /
       (tfD + lit(1.2) * ((lit(1.0) - lit(0.75)) + (lit(0.75) * dlD) / avgdl))
     val contrib = floor((idf * tfs) * lit(1048576.0)).cast("long")
-    val scored = tfdl.join(qd, Seq("term"))
+    val scored = hits.join(qd, Seq("term"))
       .crossJoin(broadcast(g))
       .select(col("query_id"), col("doc_id"), contrib.as("contrib"))
       .groupBy(col("query_id"), col("doc_id"))
       .agg(sum(col("contrib")).as("score"))
-    Skew.saltedTopKPerKey(scored, "query_id", "score", "doc_id",
-        k = k, S = salt)
-      .select(col("query_id"), col("doc_id"), col("score"), col("rnk"))
+    // reverse = true keeps each query's k smallest structs, ascending
+    val top = new CollectTopK(ColumnBridge.expression(
+      struct((-col("score")).as("neg"), col("doc_id"))), k, reverse = true)
+    scored.groupBy(col("query_id"))
+      .agg(ColumnBridge.column(top.toAggregateExpression()).as("top"))
+      .select(col("query_id"), posexplode(col("top")))
+      .selectExpr("query_id", "col.doc_id", "-col.neg AS score", "pos + 1 AS rnk")
   }
 
   /** Per-doc TF-IDF keyword extraction — the tagging/topical-audit twin
@@ -112,16 +113,15 @@ object Retrieval {
     * '|'-joined top-m terms in (score DESC, term ASC) order. */
   def tfidfKeywords(docs: DataFrame, idCol: String, textCol: String,
                     m: Int = 3): DataFrame = {
-    val (tfdl, dfq, g) = termStats(docs, idCol, textCol)
+    val tf = termCounts(docs, idCol, textCol)
+    // N over tf as in bm25TopK; df is a term window (a join: +1 exchange)
+    val g = tf.agg(countDistinct(when(col("tf") > 0, col("doc_id"))).as("n"))
     val nD = col("n").cast("double")
     val dfD = col("df").cast("double")
     val tfD = col("tf").cast("double")
     val q = floor((tfD * rationalIdf(nD, dfD)) * lit(1048576.0)).cast("long")
-    // df is needed for EVERY term here (not a query slice), so the
-    // term-keyed join is a real shuffle join — both sides are already
-    // (term)-keyed aggregates of the same scan; only the scalar broadcasts
-    val ranked = tfdl
-      .join(dfq, Seq("term"))
+    val ranked = tf
+      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("term"))))
       .crossJoin(broadcast(g))
       .select(col("doc_id"), col("term"), q.as("q"))
       .withColumn("rnk", row_number().over(
