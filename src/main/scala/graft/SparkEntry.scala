@@ -669,8 +669,8 @@ object SparkEntry {
     }),
     "q_skew_topk" -> ((s, _) => {
       // top-3 most-linked destination urls per destination host via the
-      // salted (skew-safe) two-stage window — hosts are Zipfian at crawl
-      // scale, so the naive single window over a hot host is one task
+      // bounded top-k aggregate — hosts are Zipfian at crawl scale, so a
+      // single window over a hot host would be one task
       import s.implicits._
       val links = extractedPersisted(s)
         .flatMap(p => p.links.map(l => (p.doc.url, l.dst_url)))
@@ -679,8 +679,7 @@ object SparkEntry {
         .select(expr("parse_url(dst_url, 'HOST')").as("dst_host"), col("dst_url"))
         .groupBy(col("dst_host"), col("dst_url"))
         .agg(count(lit(1)).as("cnt"))
-      graft.ops.Skew.saltedTopKPerKey(counts, "dst_host", "cnt", "dst_url",
-          k = 3, S = 8)
+      graft.ops.Skew.topKRows(counts, "dst_host", 3, -col("cnt"), col("dst_url"))
         .orderBy(col("dst_host"), col("rnk"))
     }),
     "q_boilerplate_main" -> ((s, _) => boilerFrame(s)),
@@ -933,7 +932,7 @@ object SparkEntry {
       // per-target anchor-text rollup over the planted corpus
       // (side_anchor_links); the oracle re-derives counts, the
       // (cnt DESC, anchor ASC) ranking, and both rollup joins
-      graft.ops.LinkGraph.anchorStats(anchorCorpus(s, dir), k = 5, salt = 8)),
+      graft.ops.LinkGraph.anchorStats(anchorCorpus(s, dir), k = 5)),
     "q_encoding_quality" -> ((s, dir) =>
       // encoding-damage signals over the planted corpus (side_mojidocs);
       // the oracle runs the IDENTICAL RE2∩Java pattern strings in DuckDB
@@ -952,7 +951,7 @@ object SparkEntry {
       // quantization, integer sums, centroid divisions, cosine, and
       // ascending rank in DuckDB from the raw embeddings alone
       graft.ops.Drift.centroidOutliers(t(s, dir, "embeddings"),
-        "vec_id", "embedding", "label", k = 10, salt = 8)),
+        "vec_id", "embedding", "label", k = 10)),
     "q_split_context" -> ((s, dir) =>
       // 16-token chunks with 4-token overlap (TrainingData.splitForContext
       // — non-redundant trailing-start rule); the oracle re-derives every
@@ -1085,7 +1084,7 @@ object SparkEntry {
     * Shared by q_pii_mask and SideTables (side_pii_docs). */
   /** Deterministic anchor-bearing link corpus derived from the documents
     * table — no external data: every doc emits three links (one to a HOT
-    * hub target so the salted top-k path is exercised, two to a ~25-way
+    * hub target so the top-k sees a hot key, two to a ~25-way
     * spread of site targets), anchor phrases picked from an 8-word vocab
     * by an md5 index (engine-portable: conv(hex) in Spark == '0x' cast in
     * DuckDB), with ~1/7 NULL and ~1/5 empty anchors so the text filter is
@@ -2030,7 +2029,7 @@ object SparkEntry {
          |       FROM nodes n0 LEFT JOIN c3 c ON n0.url = c.url)
          |SELECT url, round(r, 7) AS rank FROM r3""".stripMargin,
     "q_skew_topk" ->
-      // the salted two-stage window must equal the straightforward
+      // the bounded top-k aggregate must equal the straightforward
       // single-window top-k — DuckDB re-derives host, counts, and ranking
       // from the raw link rows
       s"""WITH c AS (
@@ -2678,8 +2677,8 @@ object SparkEntry {
          |       split_a <> split_b AS leaked
          |FROM p GROUP BY 1, 2""".stripMargin,
     "q_source_quota" ->
-      // the salted two-stage top-k re-derived as a plain window: exactness
-      // of the skew-safe form IS the property under test
+      // the bounded top-k aggregate re-derived as a plain window: its
+      // exactness (md5 DESC, null md5 last, doc_id) IS the property under test
       """SELECT source, doc_id, rnk FROM (
         |  SELECT source, doc_id,
         |    ROW_NUMBER() OVER (PARTITION BY source

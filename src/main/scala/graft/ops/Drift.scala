@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
  * map-side combine — one row per (group, position) per mapper, never per
  * vector; centroids (|groups| · dim doubles) broadcast back; the cosine
  * pass is the native codegen [[graft.functions.CosinePair]] per row; the
- * bottom-k per group runs the exact salted two-stage top-k.
+ * bottom-k per group is the bounded top-k aggregate [[Skew.topKRows]].
  */
 object Drift {
 
@@ -57,10 +57,11 @@ object Drift {
 
   /** The k LOWEST-affinity vectors per group: (groupCol, idCol, cent_cos,
     * rnk) with rnk 1 = furthest from the group centroid; cosine rounded
-    * to 6 (the repo's cross-engine float convention). */
+    * to 6 (the repo's cross-engine float convention). Rank order: a NaN
+    * cosine first, then ascending cosine, then a NULL one (zero-norm or
+    * NULL-element vector); ties by ascending id. */
   def centroidOutliers(emb: DataFrame, idCol: String, vecCol: String,
-                       groupCol: String, k: Int = 10,
-                       salt: Int = 8): DataFrame = {
+                       groupCol: String, k: Int = 10): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val cents = broadcast(groupCentroids(emb, groupCol, vecCol)
       .select(col(groupCol).as("__grp"), col("centroid")))
@@ -72,11 +73,8 @@ object Drift {
           // widening) instead of a transform(x -> cast) HOF lambda
           ColumnBridge.expression(col(vecCol).cast("array<double>")),
           ColumnBridge.expression(col("centroid")))), 6))
-      // negate so the shared top-k helper's (ord DESC, tie ASC) order
-      // yields ascending affinity — most-drifted first
-      .withColumn("__neg", negate(col("cent_cos")))
-      .select(col(groupCol), col(idCol), col("cent_cos"), col("__neg"))
-    Skew.saltedTopKPerKey(scored, groupCol, "__neg", idCol, k = k, S = salt)
-      .select(col(groupCol), col(idCol), col("cent_cos"), col("rnk"))
+      .select(col(groupCol), col(idCol), col("cent_cos"))
+    val c = col("cent_cos")
+    Skew.topKRows(scored, groupCol, k, isnull(c), !isnan(c), c, col(idCol))
   }
 }

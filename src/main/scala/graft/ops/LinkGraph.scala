@@ -305,34 +305,28 @@ object LinkGraph {
     *   - (dst, anchor) counts are a map-side-combinable agg — the
     *     shuffle carries one row per distinct (target, phrase) per
     *     mapper,
-    *   - the top-k phrases per target run through the exact salted
-    *     two-stage top-k ([[Skew.saltedTopKPerKey]]) — a hot target's
-    *     distinct phrases spread over S reducers, never one task,
-    *   - the final per-target row aggregates exactly k bounded structs.
+    *   - one per-target aggregate over those counts gives the totals and
+    *     the top-k phrases ([[Skew.topK]]): its partial side keeps k
+    *     phrases per target per task, so a hot target's final task
+    *     merges k rows per mapper, never its whole phrase set.
     *
     * Emits (dst_url, n_refs, n_distinct_anchors, top_anchor,
     * top_anchors) with top_anchors the '|'-joined top-k phrases in
     * (count DESC, anchor ASC) rank order. Empty/NULL anchors are
-    * uncounted (they carry no text signal). */
-  def anchorStats(links: DataFrame, k: Int = 5, salt: Int = 8): DataFrame = {
-    val withText = links
-      .filter(col("anchor").isNotNull && col("anchor") =!= lit(""))
-      .select(col("dst_url"), col("anchor"))
-    val counts = withText.groupBy(col("dst_url"), col("anchor"))
+    * uncounted (they carry no text signal), and so is a NULL target. */
+  def anchorStats(links: DataFrame, k: Int = 5): DataFrame =
+    links
+      .filter(col("dst_url").isNotNull &&
+        col("anchor").isNotNull && col("anchor") =!= lit(""))
+      .groupBy(col("dst_url"), col("anchor"))
       .agg(count(lit(1)).as("cnt"))
-    val totals = counts.groupBy(col("dst_url"))
-      .agg(sum(col("cnt")).as("n_refs"),
-        count(lit(1)).as("n_distinct_anchors"))
-    val top = Skew.saltedTopKPerKey(counts, "dst_url", "cnt", "anchor",
-        k = k, S = salt)
       .groupBy(col("dst_url"))
-      .agg(
-        min_by(col("anchor"), col("rnk")).as("top_anchor"),
-        array_join(transform(array_sort(
-            collect_list(struct(col("rnk"), col("anchor")))),
-          s => s("anchor")), "|").as("top_anchors"))
-    totals.join(top, Seq("dst_url"))
-  }
+      .agg(sum(col("cnt")).as("n_refs"),
+        count(lit(1)).as("n_distinct_anchors"),
+        Skew.topK(struct((-col("cnt")).as("neg"), col("anchor")), k).as("top"))
+      .select(col("dst_url"), col("n_refs"), col("n_distinct_anchors"),
+        col("top")(0)("anchor").as("top_anchor"),
+        array_join(col("top")("anchor"), "|").as("top_anchors"))
 
   /** In-degree distribution in log2 buckets — the power-law audit for a
     * crawl's link graph (a healthy web graph is Zipfian; a flat or

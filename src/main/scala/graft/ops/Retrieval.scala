@@ -1,10 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /**
  * Lexical retrieval over the corpus — the inverted-index primitive behind
@@ -35,9 +33,9 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
  *     one row per (doc, query-term) hit plus one per doc,
  *   - query terms with their dfs, and the (N, total-token) scalar,
  *     broadcast (a query set is human-sized),
- *   - top-k per query is Spark's bounded CollectTopK aggregate: a task
- *     sends at most k rows per query, so a query matching half the
- *     corpus never funnels through one task.
+ *   - top-k per query (and per doc) is the bounded aggregate
+ *     [[Skew.topK]]: a task sends at most k rows per key, so a query
+ *     matching half the corpus never funnels through one task.
  */
 object Retrieval {
 
@@ -62,7 +60,6 @@ object Retrieval {
     * floor(x · 2^20), x ≥ 0 (> -1 if a null id lifts df to N + 1). */
   def bm25TopK(docs: DataFrame, idCol: String, textCol: String,
                queries: Seq[(String, Seq[String])], k: Int = 10): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
     val qdf = docs.sparkSession.createDataFrame(queries.flatMap {
       case (q, ts) => ts.map(t => (q, t)) }).toDF("query_id", "term")
     val tf = termCounts(docs, idCol, textCol,
@@ -93,24 +90,16 @@ object Retrieval {
       .select(col("query_id"), col("doc_id"), contrib.as("contrib"))
       .groupBy(col("query_id"), col("doc_id"))
       .agg(sum(col("contrib")).as("score"))
-    // reverse = true keeps each query's k smallest structs, ascending
-    val top = new CollectTopK(ColumnBridge.expression(
-      struct((-col("score")).as("neg"), col("doc_id"))), k, reverse = true)
-    scored.groupBy(col("query_id"))
-      .agg(ColumnBridge.column(top.toAggregateExpression()).as("top"))
-      .select(col("query_id"), posexplode(col("top")))
-      .selectExpr("query_id", "col.doc_id", "-col.neg AS score", "pos + 1 AS rnk")
+    Skew.topKRows(scored, "query_id", k, -col("score"), col("doc_id"))
   }
 
   /** Per-doc TF-IDF keyword extraction — the tagging/topical-audit twin
     * of [[bm25TopK]]: every doc's `m` highest-scoring terms under
     * tf · rational-IDF, quantized to BIGINT with the same 2^20 grid so
     * the ranking is integer-exact and the oracle re-derives it. The
-    * per-doc ranking window is SAFE without salting: its partition is
-    * one document's distinct terms — bounded by doc length, not corpus
-    * size (unlike a per-query ranking, where one key can match half the
-    * corpus). Emits (idCol, keywords, top_score) with keywords the
-    * '|'-joined top-m terms in (score DESC, term ASC) order. */
+    * top-m per doc is one [[Skew.topK]] aggregate, read straight from its
+    * sorted array. Emits (idCol, keywords, top_score) with keywords the
+    * '|'-joined top-m (≥ 1) terms in (score DESC, term ASC) order. */
   def tfidfKeywords(docs: DataFrame, idCol: String, textCol: String,
                     m: Int = 3): DataFrame = {
     val tf = termCounts(docs, idCol, textCol)
@@ -120,20 +109,12 @@ object Retrieval {
     val dfD = col("df").cast("double")
     val tfD = col("tf").cast("double")
     val q = floor((tfD * rationalIdf(nD, dfD)) * lit(1048576.0)).cast("long")
-    val ranked = tf
-      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("term"))))
+    tf.withColumn("df", count(lit(1)).over(Window.partitionBy(col("term"))))
       .crossJoin(broadcast(g))
-      .select(col("doc_id"), col("term"), q.as("q"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(col("doc_id"))
-          .orderBy(col("q").desc, col("term").asc)))
-      .filter(col("rnk") <= m)
-    ranked.groupBy(col("doc_id"))
-      .agg(
-        array_join(transform(array_sort(
-            collect_list(struct(col("rnk"), col("term")))),
-          s => s("term")), "|").as("keywords"),
-        max(when(col("rnk") === 1, col("q"))).as("top_score"))
-      .select(col("doc_id").as(idCol), col("keywords"), col("top_score"))
+      .groupBy(col("doc_id"))
+      .agg(Skew.topK(struct((-q).as("neg"), col("term")), m).as("top"))
+      .select(col("doc_id").as(idCol),
+        array_join(col("top")("term"), "|").as("keywords"),
+        (-col("top")(0)("neg")).as("top_score"))
   }
 }

@@ -1,8 +1,10 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /**
  * Explicit skew handling (north_rule: "partitioning / shuffle / skew
@@ -11,9 +13,14 @@ import org.apache.spark.sql.functions._
  * double-digit share of a crawl's link rows, so any per-host window,
  * per-host partition, or host-keyed join concentrates that share into a
  * single task. AQE's skew-join splitting is the backstop for sort-merge
- * joins; these operators cover what AQE cannot re-plan: window/top-k
- * over a hot key, pre-write partition balance, and hot-key joins whose
- * build side is too large to broadcast.
+ * joins; these operators cover what AQE cannot re-plan: top-k over a hot
+ * key, pre-write partition balance, and hot-key joins whose build side
+ * is too large to broadcast.
+ *
+ * Top-k per key needs no salt: [[topK]] is a bounded aggregate whose
+ * partial side keeps at most k rows per key per task, so a hot key
+ * reaches its final task as k rows from each mapper, never as its whole
+ * row set, and the plan has one exchange and no window.
  *
  * All salts are DETERMINISTIC — `xxhash64` of an existing
  * roughly-unique column, never `rand()` — per the engine's determinism
@@ -36,25 +43,31 @@ object Skew {
       .repartition(numPartitions, col(keyCol), col("__salt"))
       .drop("__salt")
 
-  /** EXACT top-k rows per key by (`ordCol` DESC, `tieCol` ASC),
-    * skew-safe: stage 1 ranks within (key, salt) — a hot key's rows are
-    * spread over S window partitions instead of one task — and keeps k
-    * per (key, salt); stage 2 ranks the ≤ S·k survivors per key. Exact
-    * because a global top-k row is necessarily in the top-k of its salt
-    * slice. Input is pre-aggregated: one row per (key, tie), `ordCol`
-    * already final. Emits the input columns + `rnk` (1-based). */
-  def saltedTopKPerKey(df: DataFrame, keyCol: String, ordCol: String,
-                       tieCol: String, k: Int, S: Int): DataFrame = {
-    val w1 = Window.partitionBy(col(keyCol), col("__salt"))
-      .orderBy(col(ordCol).desc, col(tieCol).asc)
-    val w2 = Window.partitionBy(col(keyCol))
-      .orderBy(col(ordCol).desc, col(tieCol).asc)
-    df.withColumn("__salt", saltCol(tieCol, S))
-      .withColumn("__r1", row_number().over(w1))
-      .filter(col("__r1") <= k)
-      .withColumn("rnk", row_number().over(w2))
-      .filter(col("rnk") <= k)
-      .drop("__salt", "__r1")
+  /** Aggregate: the `k` (≥ 1) smallest values of `order` in the group,
+    * sorted ascending — Spark's bounded `CollectTopK` (`reverse = true`;
+    * its companion object is not accessible, hence `new`). A struct
+    * orders field by field, each ascending with NULL FIRST: a descending
+    * field goes in negated, and a field whose NULLs must rank last is
+    * led by its `isnull`. */
+  def topK(order: Column, k: Int): Column = {
+    require(k > 0, s"k must be positive, got $k")
+    ColumnBridge.column(new CollectTopK(ColumnBridge.expression(order), k,
+      reverse = true).toAggregateExpression())
+  }
+
+  /** Row form of [[topK]]: the `k` rows per `keyCol` smallest in
+    * `struct(order)`, as the input columns plus `rnk` (1-based int, as
+    * `row_number` gives). Rows tied on `order` rank by their other
+    * columns. */
+  def topKRows(df: DataFrame, keyCol: String, k: Int, order: Column*): DataFrame = {
+    val rest = df.columns.filterNot(_ == keyCol)
+    df.groupBy(col(keyCol))
+      .agg(topK(struct(struct(order: _*), struct(rest.map(col): _*).as("r")), k)
+        .as("__top"))
+      .select(col(keyCol), posexplode(col("__top")).as(Seq("__pos", "__top")))
+      .select(df.columns.map(c =>
+          if (c == keyCol) col(c) else col("__top.r")(c).as(c)) :+
+        (col("__pos") + 1).as("rnk"): _*)
   }
 
   /** EXACT global running total (inclusive) of `valueCol` in `order` —

@@ -86,18 +86,18 @@ object TrainingData {
   /** Per-source quota — corpus balancing: keep at most `k` docs per
     * source/host, chosen in deterministic `md5(source:id)` order (a
     * shuffled-but-reproducible order, so the quota is not biased by id
-    * assignment). Web sources are Zipfian, so the ranking reuses
-    * `Skew.saltedTopKPerKey`: a hot source's rows rank within S salt
-    * slices first, then only the ≤ S·k survivors rank per source —
-    * no single task ever buffers a whole hot source. Emits the input
-    * projection + `rnk` (1-based). */
+    * assignment): md5 DESC, id ASC, a NULL md5 (NULL source or id) last.
+    * Web sources are Zipfian, so the ranking is the bounded aggregate
+    * [[Skew.topKRows]]: a task keeps k rows per source, so no single
+    * task ever buffers a whole hot source. Emits the input projection +
+    * `rnk` (1-based). */
   def sourceQuota(docs: DataFrame, srcCol: String, idCol: String,
-                  k: Int, S: Int = 8): DataFrame =
-    Skew.saltedTopKPerKey(
-      docs.withColumn("__ord",
-        md5(concat(col(srcCol), lit(":"), col(idCol).cast("string")))),
-      srcCol, "__ord", idCol, k, S)
-      .drop("__ord")
+                  k: Int): DataFrame = {
+    val h = md5(concat(col(srcCol), lit(":"), col(idCol).cast("string")))
+    // ascending in the digit-reversed hex = descending in the md5 hex
+    Skew.topKRows(docs, srcCol, k, isnull(h),
+      translate(h, "0123456789abcdef", "fedcba9876543210"), col(idCol))
+  }
 
   /** Only the surviving ids (join back to texts downstream). */
   def keptIds(docs: DataFrame, idCol: String = "doc_id",

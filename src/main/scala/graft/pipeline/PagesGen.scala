@@ -181,14 +181,4 @@ object PagesGen {
         htmlOf(2000L + i, mix64(2000L + i)).getBytes("UTF-8"), null, "en"))
     pages(spark, n).union(spark.createDataset(bad))
   }
-
-  /** Write as the local stand-in for the Iceberg layout: parquet partitioned
-    * by url-hash bucket (SURVEY §4.2 explicit partitioning). */
-  def writePartitioned(spark: SparkSession, n: Long, path: String,
-                       numBuckets: Int = 16): Unit = {
-    import org.apache.spark.sql.functions._
-    pages(spark, n)
-      .withColumn("url_bucket", Extract.bucketCol(col("url"), numBuckets).cast("int"))
-      .write.mode("overwrite").partitionBy("url_bucket").parquet(path)
-  }
 }

@@ -42,7 +42,7 @@ class DriftSpec extends AnyFunSuite {
     val other = Seq((50L, "b", Seq(0.0f, 1.0f)))
     val out = Drift.centroidOutliers(
         (cluster ++ drifter ++ other).toDF("vec_id", "label", "embedding"),
-        "vec_id", "embedding", "label", k = 3, salt = 4)
+        "vec_id", "embedding", "label", k = 3)
       .as[(String, Long, Double, Int)].collect()
     val aRanked = out.filter(_._1 == "a").sortBy(_._4)
     assert(aRanked.head._2 == 99L)
@@ -51,5 +51,24 @@ class DriftSpec extends AnyFunSuite {
     // a 1-vector group is its own centroid: cosine 1, still reported
     val b = out.filter(_._1 == "b")
     assert(b.map(_._2).toSeq == Seq(50L) && b.head._3 == 1.0)
+  }
+
+  test("centroidOutliers: a zero vector (NULL cosine) ranks last, NaN first") {
+    val vecs = Seq(
+      (1L, "a", Seq(1.0f, 0.0f)),
+      (2L, "a", Seq(0.9f, 0.1f)),
+      (3L, "a", Seq(0.0f, 0.0f)),            // zero norm → NULL cent_cos
+      (4L, "a", Seq(-1.0f, 0.5f)),
+      (5L, "a", Seq(Float.NaN, 1.0f)))       // NaN cent_cos
+      .toDF("vec_id", "label", "embedding")
+    def ranked(k: Int) = Drift.centroidOutliers(vecs, "vec_id", "embedding",
+        "label", k = k)
+      .as[(String, Long, Option[Double], Int)].collect().sortBy(_._4).toSeq
+    val all = ranked(5)
+    assert(all.map(_._4) == Seq(1, 2, 3, 4, 5))
+    assert(all.map(_._2) == Seq(5L, 4L, 1L, 2L, 3L), all)
+    assert(all.head._3.exists(_.isNaN) && all.last._3.isEmpty, all)
+    // the NULL cosine is the first row cut by a smaller k
+    assert(ranked(4).map(_._2) == Seq(5L, 4L, 1L, 2L))
   }
 }

@@ -63,7 +63,7 @@ class LinkGraphSpec extends AnyFunSuite {
       ("s6", "https://t.com/", ""),       // uncounted
       ("s7", "https://u.com/", "only")
     ).toDF("src_url", "dst_url", "anchor")
-    val out = LinkGraph.anchorStats(links, k = 2, salt = 4).collect()
+    val out = LinkGraph.anchorStats(links, k = 2).collect()
       .map(r => r.getString(0) -> r).toMap
     val tRow = out("https://t.com/")
     assert(tRow.getAs[Long]("n_refs") == 4)
@@ -116,7 +116,7 @@ class LinkGraphSpec extends AnyFunSuite {
       (s"s$i", "https://hot.com/", s"a${i % 40}")
     }
     val links = rows.toDF("src_url", "dst_url", "anchor")
-    val got = LinkGraph.anchorStats(links, k = 5, salt = 8)
+    val got = LinkGraph.anchorStats(links, k = 5)
       .filter(col("dst_url") === "https://hot.com/").collect()(0)
     // every anchor occurs exactly 3 times → pure anchor-asc tie-break:
     // a0 < a1 < a10 < a11 < a12 (string order)

@@ -1,5 +1,11 @@
 package graft.ops
 
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateMode, CollectTopK, Final, Partial}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.window.WindowExec
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -26,27 +32,59 @@ class SkewSpec extends AnyFunSuite {
     .agg(count(lit(1)).as("cnt"))
 
   test("salted top-k per key equals the single-window top-k exactly") {
-    val salted = Skew.saltedTopKPerKey(counts, "dst_host", "cnt", "dst_url",
-        k = 3, S = 8)
+    // beside the Zipfian counts: four cnt-5 ties straddling the k = 3
+    // boundary, a key with fewer than k rows, a null tie value, a null key
+    val edge = Seq(
+      ("tie.example.com", "https://tie.example.com/z", 9L),
+      ("tie.example.com", "https://tie.example.com/d", 5L),
+      ("tie.example.com", "https://tie.example.com/b", 5L),
+      ("tie.example.com", "https://tie.example.com/c", 5L),
+      ("tie.example.com", "https://tie.example.com/a", 5L),
+      ("small.example.com", "https://small.example.com/x", 1L),
+      ("nul.example.com", "https://nul.example.com/w", 7L),
+      ("nul.example.com", "https://nul.example.com/y", 4L),
+      ("nul.example.com", null, 4L),
+      (null, "https://u.example/", 2L)).toDF("dst_host", "dst_url", "cnt")
+    val input = counts.unionByName(edge)
+    val got = Skew.topKRows(input, "dst_host", 3, -$"cnt", $"dst_url")
       .select($"dst_host", $"dst_url", $"cnt", $"rnk")
       .as[(String, String, Long, Int)].collect().toSet
     val w = Window.partitionBy($"dst_host").orderBy($"cnt".desc, $"dst_url".asc)
-    val naive = counts.withColumn("rnk", row_number().over(w))
+    val naive = input.withColumn("rnk", row_number().over(w))
       .filter($"rnk" <= 3)
       .select($"dst_host", $"dst_url", $"cnt", $"rnk")
       .as[(String, String, Long, Int)].collect().toSet
-    assert(salted == naive)
-    assert(salted.nonEmpty)
+    assert(got == naive)
     // every key emits min(k, distinct urls) rows
-    assert(salted.count(_._1 == "hot.example.com") == 3)
+    assert(got.count(_._1 == "hot.example.com") == 3)
+    def ranked(host: String) =
+      got.filter(_._1 == host).toSeq.sortBy(_._4).map(r => (r._2, r._4))
+    assert(ranked("tie.example.com") == Seq("https://tie.example.com/z" -> 1,
+      "https://tie.example.com/a" -> 2, "https://tie.example.com/b" -> 3))
+    assert(ranked("small.example.com") == Seq("https://small.example.com/x" -> 1))
+    assert(ranked("nul.example.com") == Seq("https://nul.example.com/w" -> 1,
+      (null: String) -> 2, "https://nul.example.com/y" -> 3))
+    assert(ranked(null) == Seq("https://u.example/" -> 1))
   }
 
-  test("salted top-k stage 1 windows over (key, salt) — the hot key is split") {
-    val plan = Skew.saltedTopKPerKey(counts, "dst_host", "cnt", "dst_url",
-      k = 3, S = 8).queryExecution.optimizedPlan.toString
-    assert(plan.contains("__salt"), plan.takeRight(500))
-    // two window nodes: the salted pre-rank and the final rank
-    assert("windowspecdefinition".r.findAllIn(plan.toLowerCase).size >= 2)
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  test("top-k plan: a partial aggregate, one exchange, the final aggregate, " +
+      "no window") {
+    val df = Skew.topKRows(counts, "dst_host", 3, -$"cnt", $"dst_url")
+    df.collect()
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
+      case p => p
+    }
+    assert(Plans.collect(plan) { case w: WindowExec => w }.isEmpty, plan)
+    val topKs = Plans.collect(plan) { case a: ObjectHashAggregateExec
+        if a.aggregateExpressions.exists(_.aggregateFunction.isInstanceOf[CollectTopK]) => a }
+    def inMode(m: AggregateMode) = topKs.filter(_.aggregateExpressions.forall(_.mode == m))
+    assert(topKs.size == 2 && inMode(Partial).size == 1 && inMode(Final).size == 1, plan)
+    def exchanges(p: SparkPlan) = Plans.collect(p) { case e: ShuffleExchangeLike => e }.size
+    // exactly one exchange between the partial and the final aggregate
+    assert(exchanges(inMode(Final).head) - exchanges(inMode(Partial).head) == 1, plan)
   }
 
   test("salted repartition spreads the hot key over many partitions") {

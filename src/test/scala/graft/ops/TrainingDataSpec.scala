@@ -48,9 +48,20 @@ class TrainingDataSpec extends AnyFunSuite {
     assert(b != a1) // independent draw under a different salt
   }
 
+  /** The single-window reference of sourceQuota: per source, md5(source:id)
+    * DESC (NULL last), id ASC. */
+  private def windowQuota(rows: org.apache.spark.sql.DataFrame, k: Int) = {
+    import org.apache.spark.sql.expressions.Window
+    rows.withColumn("__ord",
+        md5(concat($"source", lit(":"), $"doc_id".cast("string"))))
+      .withColumn("rnk", row_number().over(
+        Window.partitionBy($"source").orderBy($"__ord".desc, $"doc_id".asc)))
+      .filter($"rnk" <= k).select($"source", $"doc_id", $"rnk")
+  }
+
   test("source quota: exact k per source in deterministic hash order") {
-    // skewed: src-hot has 300 rows, others 5 — the salted two-stage top-k
-    // must still return exactly k per source, identical to a plain window
+    // skewed: src-hot has 300 rows, others 5 — the bounded top-k must
+    // still return exactly k per source, identical to a plain window
     val rows = ((0L until 300L).map(i => (i, "src-hot")) ++
       (300L until 305L).map(i => (i, "src-a")) ++
       (305L until 310L).map(i => (i, "src-b"))).toDF("doc_id", "source")
@@ -61,15 +72,25 @@ class TrainingDataSpec extends AnyFunSuite {
     assert(out.count(_._1 == "src-a") == 3)
     assert(out.count(_._1 == "src-b") == 3)
     assert(out.filter(_._1 == "src-a").map(_._3).sorted.toSeq == Seq(1, 2, 3))
-    // exactness: equals the unsalted single-window reference
-    import org.apache.spark.sql.expressions.Window
-    val ref = rows.withColumn("__ord",
-        md5(concat($"source", lit(":"), $"doc_id".cast("string"))))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy($"source").orderBy($"__ord".desc, $"doc_id".asc)))
-      .filter($"rnk" <= 3).select($"source", $"doc_id", $"rnk")
-      .as[(String, Long, Int)].collect()
+    // exactness: equals the single-window reference
+    val ref = windowQuota(rows, 3).as[(String, Long, Int)].collect()
     assert(out.sortBy(r => (r._1, r._3)).toSeq == ref.sortBy(r => (r._1, r._3)).toSeq)
+  }
+
+  test("source quota: a null id or source (NULL md5) keeps its window rank") {
+    val rows = Seq((Some(1L), "s"), (None, "s"), (Some(2L), "s"),
+      (Some(3L), "s"), (Some(5L), null), (Some(4L), null))
+      .toDF("doc_id", "source")
+    val out = TrainingData.sourceQuota(rows, "source", "doc_id", k = 4)
+      .select($"source", $"doc_id", $"rnk")
+      .as[(Option[String], Option[Long], Int)].collect()
+    val ref = windowQuota(rows, 4).as[(Option[String], Option[Long], Int)].collect()
+    assert(out.toSet == ref.toSet && out.length == 6)
+    // the null id's md5 is NULL: ranked after every digest of its source
+    assert(out.contains((Some("s"), None, 4)))
+    // a null source is one group of NULL digests, ranked by id
+    assert(out.filter(_._1.isEmpty).map(r => r._2 -> r._3).toSet ==
+      Set(Some(4L) -> 1, Some(5L) -> 2))
   }
 
   test("single narrow shuffle: one Exchange, keyed on the content hash") {
