@@ -149,9 +149,9 @@ object SideTables {
     // PII / paragraph corpora: the INPUT rows for q_pii_mask and
     // q_paragraph_dedup — DuckDB re-derives both operators from these
     save(SparkEntry.piiCorpus(spark, sfDir), "side_pii_docs")
-    // anchor-bearing link rows: the INPUT for q_anchor_stats — DuckDB
+    // anchor-bearing link rows: the INPUT for the anchor-stats query — DuckDB
     // re-derives the whole per-target anchor rollup from these
-    save(SparkEntry.anchorCorpus(spark, sfDir), "side_anchor_links")
+    save(graft.queries.Graph.anchorCorpus(spark, sfDir), "side_anchor_links")
     // encoding-damage rows: the INPUT for q_encoding_quality — DuckDB
     // re-runs the identical damage regexes + flag cross-multiply
     save(SparkEntry.mojiCorpus(spark, sfDir), "side_mojidocs")

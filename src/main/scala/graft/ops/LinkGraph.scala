@@ -441,7 +441,7 @@ object LinkGraph {
    *    `spark.graft.checkpointDir` on a cluster);
    *  - wave count is `maxDepth`, not graph size; the anti-join guarantees
    *    a url settles at its FIRST discovery wave, which for BFS is the
-   *    true minimum distance — so the q_crawl_depth oracle can re-derive
+   *    true minimum distance — so the crawl-depth oracle can re-derive
    *    the same table as `min(depth)` over a recursive-CTE expansion.
    *
    * edges: first two columns (src, dst); seeds: first column url.

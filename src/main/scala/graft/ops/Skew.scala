@@ -7,41 +7,21 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /**
- * Explicit skew handling (north_rule: "partitioning / shuffle / skew
- * handled explicitly"; north star: "salted repartitioning for skewed
- * hosts"). Web link/host keys are Zipfian — one popular host can own a
- * double-digit share of a crawl's link rows, so any per-host window,
- * per-host partition, or host-keyed join concentrates that share into a
- * single task. AQE's skew-join splitting is the backstop for sort-merge
- * joins; these operators cover what AQE cannot re-plan: top-k over a hot
- * key, pre-write partition balance, and hot-key joins whose build side
- * is too large to broadcast.
+ * Explicit skew handling for the two shapes AQE cannot re-plan. Web
+ * link/host keys are Zipfian — one popular host can own a double-digit
+ * share of a crawl's link rows — and AQE's skew-join splitting, the
+ * backstop for sort-merge joins, does not reach:
  *
- * Top-k per key needs no salt: [[topK]] is a bounded aggregate whose
- * partial side keeps at most k rows per key per task, so a hot key
- * reaches its final task as k rows from each mapper, never as its whole
- * row set, and the plan has one exchange and no window.
- *
- * All salts are DETERMINISTIC — `xxhash64` of an existing
- * roughly-unique column, never `rand()` — per the engine's determinism
- * discipline (same input ⇒ same plan ⇒ same bytes).
+ *   - top-k per key ([[topK]], [[topKRows]]): a bounded aggregate whose
+ *     partial side keeps at most k rows per key per task, so a hot key
+ *     reaches its final task as k rows from each mapper, never as its
+ *     whole row set, and the plan has one exchange and no window — no
+ *     salt is needed;
+ *   - a global running total ([[rangedRunningSum]]): range-partitioned
+ *     in two stages instead of a partition-less window that funnels
+ *     every row through one task.
  */
 object Skew {
-
-  /** Deterministic salt in [0, S) derived from `fromCol` (xxhash64 of a
-    * null row is the seed, so the salt is never null). */
-  def saltCol(fromCol: String, S: Int): Column =
-    pmod(xxhash64(col(fromCol)), lit(S.toLong)).cast("int")
-
-  /** Salted repartition — the north-star phrase as code: rows of a hot
-    * `keyCol` spread across up to S partitions instead of one, so
-    * downstream per-partition work (mapPartitions extraction, file
-    * writes) sees balanced input even when one host dominates. */
-  def saltedRepartition(df: DataFrame, keyCol: String, fromCol: String,
-                        S: Int, numPartitions: Int): DataFrame =
-    df.withColumn("__salt", saltCol(fromCol, S))
-      .repartition(numPartitions, col(keyCol), col("__salt"))
-      .drop("__salt")
 
   /** Aggregate: the `k` (≥ 1) smallest values of `order` in the group,
     * sorted ascending — Spark's bounded `CollectTopK` (`reverse = true`;
@@ -121,27 +101,5 @@ object Skew {
     cum.join(broadcast(offsets), Seq("__rrs_pid"))
       .withColumn(outCol, col("__rrs_off") + col("__rrs_cum"))
       .drop("__rrs_pid", "__rrs_val", "__rrs_cum", "__rrs_off")
-  }
-
-  /** Skew join for when the small side cannot broadcast: the small side
-    * is replicated S× (one copy per salt value) and the big side salted
-    * deterministically, so a hot key's probe rows spread over S reducers
-    * instead of one. Exact for "inner" and "left_outer" (big side
-    * preserved; every big row matches exactly the replica carrying its
-    * salt). Output carries the big side's key column. */
-  def saltedJoin(big: DataFrame, small: DataFrame, keyCol: String,
-                 fromCol: String, S: Int,
-                 joinType: String = "inner"): DataFrame = {
-    require(joinType == "inner" || joinType == "left_outer",
-      s"saltedJoin is exact for inner/left_outer only, got $joinType")
-    val saltedBig = big.withColumn("__salt", saltCol(fromCol, S))
-    val replicated = small
-      .withColumn("__salt", explode(array((0 until S).map(i => lit(i)): _*)))
-    saltedBig.join(replicated,
-        saltedBig(keyCol) === replicated(keyCol) &&
-          saltedBig("__salt") === replicated("__salt"),
-        joinType)
-      .drop(replicated(keyCol))
-      .drop(saltedBig("__salt")).drop(replicated("__salt"))
   }
 }

@@ -11,9 +11,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.pipeline.SparkTestBase
 
-/** Skew operators: exactness vs the naive plans, and balance under a
-  * Zipfian key (one host owning most rows — the crawl-scale shape the
-  * north star's "salted repartitioning for skewed hosts" targets). */
+/** Skew operators: exactness vs the naive plans over a Zipfian key (one
+  * host owning most rows — the crawl-scale shape), and the plan shapes
+  * that keep a hot key off a single task. */
 class SkewSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestBase.spark
@@ -85,53 +85,6 @@ class SkewSpec extends AnyFunSuite {
     def exchanges(p: SparkPlan) = Plans.collect(p) { case e: ShuffleExchangeLike => e }.size
     // exactly one exchange between the partial and the final aggregate
     assert(exchanges(inMode(Final).head) - exchanges(inMode(Partial).head) == 1, plan)
-  }
-
-  test("salted repartition spreads the hot key over many partitions") {
-    val parted = Skew.saltedRepartition(links, "dst_host", "dst_url",
-      S = 8, numPartitions = 16)
-    val hotPerPartition = parted
-      .mapPartitions(it => Iterator.single(it.count(_.getString(0) == "hot.example.com")))
-      .collect()
-    val nonEmpty = hotPerPartition.count(_ > 0)
-    assert(nonEmpty > 1, s"hot key stayed in $nonEmpty partition(s)")
-    assert(hotPerPartition.max < 2000, "one partition still holds the whole hot key")
-    // vs the unsalted repartition: ALL hot rows in exactly one partition
-    val naive = links.repartition(16, $"dst_host")
-      .mapPartitions(it => Iterator.single(it.count(_.getString(0) == "hot.example.com")))
-      .collect()
-    assert(naive.count(_ > 0) == 1)
-  }
-
-  test("salted join equals the plain join (inner and left_outer)") {
-    val dim = (0 until 61).map(i => (s"host$i.example.com", i % 5)) ++
-      Seq(("hot.example.com", 99))
-    val dimDf = dim.toDF("dst_host", "tier")
-    def canon(df: org.apache.spark.sql.DataFrame): Set[(String, String, Any)] =
-      df.select($"dst_host", $"dst_url", $"tier").collect()
-        .map(r => (r.getString(0), r.getString(1), r.get(2))).toSet
-    val plainInner = canon(links.join(dimDf, Seq("dst_host"), "inner"))
-    val saltedInner = canon(Skew.saltedJoin(links, dimDf, "dst_host", "dst_url", S = 8))
-    assert(saltedInner == plainInner && saltedInner.nonEmpty)
-    val plainLeft = canon(links.join(dimDf, Seq("dst_host"), "left_outer"))
-    val saltedLeft = canon(
-      Skew.saltedJoin(links, dimDf, "dst_host", "dst_url", S = 8, "left_outer"))
-    assert(saltedLeft == plainLeft)
-    // unmatched big-side hosts survive left_outer with null tier
-    assert(saltedLeft.exists(_._3 == null) == plainLeft.exists(_._3 == null))
-  }
-
-  test("salt is deterministic and in range") {
-    val salts = links.select(Skew.saltCol("dst_url", 8).as("s"))
-      .as[Int].collect()
-    assert(salts.forall(s => s >= 0 && s < 8))
-    val again = links.select(Skew.saltCol("dst_url", 8).as("s"))
-      .as[Int].collect()
-    assert(salts.toSeq == again.toSeq)
-    // null input still salts (xxhash64 of a null row is the seed)
-    val nullSalt = Seq(Tuple1[String](null)).toDF("dst_url")
-      .select(Skew.saltCol("dst_url", 8).as("s")).as[Int].head()
-    assert(nullSalt >= 0 && nullSalt < 8)
   }
 
   test("rangedRunningSum equals the single-partition window cumsum " +
