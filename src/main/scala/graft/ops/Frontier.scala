@@ -85,16 +85,10 @@ object Frontier {
   def crawlPlan(frontier: DataFrame, robots: DataFrame, userAgent: String,
                 numWorkers: Int = 5, defaultDelayMs: Long = 3000L,
                 urlCol: String = "url",
-                priorityCol: String = "priority_score",
-                paths: Option[DataFrame] = None): DataFrame = {
+                priorityCol: String = "priority_score"): DataFrame = {
     require(numWorkers > 0, s"numWorkers must be positive: $numWorkers")
     val dflt = math.min(math.max(defaultDelayMs, 500L), 5000L)
-    // `paths`: a precomputed [[frontierPaths]] frame for this frontier —
-    // shares the typed match-path map with the caller's robots-corpus
-    // derivation instead of recomputing it here (see [[robotsFilterOn]])
-    val slim = paths.getOrElse(
-      frontierPaths(frontier.select(col(urlCol).as("url"))))
-    val allowed = robotsFilterOn(slim, robots, userAgent)
+    val allowed = robotsFilter(frontier, robots, userAgent, urlCol)
       .filter(col("allowed"))
       .join(frontier.select(col(urlCol).as("url"),
         col(priorityCol).as("__p")), Seq("url"))
@@ -193,29 +187,6 @@ object Frontier {
       }.toDF()
   }
 
-  /**
-   * Robots gate over a url frontier: which urls may `userAgent` fetch,
-   * and at what per-host delay — `urllib.robotparser.can_fetch` semantics
-   * host-by-host (fuzz-pinned in RobotsFuzzSpec), evaluated as a PLAN:
-   *
-   *  - robots bodies are parsed ONCE PER HOST (not per url) and reduced
-   *    to the selected entry's rule array for this agent;
-   *  - the per-url first-match scan runs in pure Catalyst
-   *    (`filter(rules, ...)` + null-safe `get(..., 0)` — first match =
-   *    head of the order-preserving filter), so the hot path stays inside
-   *    whole-stage codegen; only the tiny match-path normalization
-   *    (quote∘urlunparse∘urlparse∘unquote, CPython-pinned) is a typed map;
-   *  - the only shuffle carries (url, host, match_path) and the per-host
-   *    policy rows — never page payloads;
-   *  - a host ABSENT from the robots corpus is `no_robots` (allow — the
-   *    404 branch of `RobotFileParser.read()`), kept visible rather than
-   *    silently merged into the rule path.
-   *
-   * Returns (url, host, match_path, allowed, decision, crawl_delay_s);
-   * `decision` names the branch that decided, and is re-derived
-   * relationally by the q_robots_filter oracle from status + parsed
-   * structure alone.
-   */
   /** (url, match_path, host) — the normalized per-url probe frame
     * `robotsFilter` matches rule prefixes against (exported as
     * side_rb_frontier so the oracle takes the CPython-pinned match path
@@ -274,19 +245,32 @@ object Frontier {
     (entries, agents, rules)
   }
 
+  /**
+   * Robots gate over a url frontier: which urls may `userAgent` fetch,
+   * and at what per-host delay — `urllib.robotparser.can_fetch` semantics
+   * host-by-host (fuzz-pinned in RobotsFuzzSpec), evaluated as a PLAN:
+   *
+   *  - robots bodies are parsed ONCE PER HOST (not per url) and reduced
+   *    to the selected entry's rule array for this agent;
+   *  - the per-url first-match scan runs in pure Catalyst
+   *    (`filter(rules, ...)` + null-safe `get(..., 0)` — first match =
+   *    head of the order-preserving filter), so the hot path stays inside
+   *    whole-stage codegen; only the tiny match-path normalization
+   *    (quote∘urlunparse∘urlparse∘unquote, CPython-pinned) is a typed map;
+   *  - the only shuffle carries (url, host, match_path) and the per-host
+   *    policy rows — never page payloads;
+   *  - a host ABSENT from the robots corpus is `no_robots` (allow — the
+   *    404 branch of `RobotFileParser.read()`), kept visible rather than
+   *    silently merged into the rule path.
+   *
+   * Returns (url, host, match_path, allowed, decision, crawl_delay_s);
+   * `decision` names the branch that decided, and is re-derived
+   * relationally by the q_robots_filter oracle from status + parsed
+   * structure alone.
+   */
   def robotsFilter(frontier: DataFrame, robots: DataFrame, userAgent: String,
-                   urlCol: String = "url"): DataFrame =
-    robotsFilterOn(frontierPaths(frontier, urlCol), robots, userAgent)
-
-  /** [[robotsFilter]] over an ALREADY-normalized (url, match_path, host)
-    * probe frame — callers that also feed the same frame to
-    * [[syntheticRobots]] (or any per-host derivation) compute the typed
-    * match-path map once and pass it here instead of re-deriving it
-    * per consumer (r6: q_crawl_plan evaluated frontierPaths twice and the
-    * frontier distinct three times through the convenience overload). */
-  def robotsFilterOn(slim: DataFrame, robots: DataFrame,
-                     userAgent: String): DataFrame = {
-    val joined = slim.join(
+                   urlCol: String = "url"): DataFrame = {
+    val joined = frontierPaths(frontier, urlCol).join(
       hostPolicies(robots, userAgent).withColumnRenamed("host", "__rh"),
       col("host") === col("__rh"), "left")
     val firstMatch = expr(

@@ -315,6 +315,20 @@ object Extract {
     pages.mapPartitions { it => it.map(extractPage(_, numBuckets, pivotYear)) }
   }
 
+  /** docs_clean's flat layout of an extraction pass: the doc columns, then
+    * the `meta` struct and the `links`/`anchors` arrays. Its one spelling:
+    * `run` writes it and `SparkEntry.extractedPersisted` caches it. */
+  private[graft] def flat(pages: Dataset[ExtractedPage]): DataFrame =
+    pages.select(col("doc.*"), col("meta"), col("links"), col("anchors"))
+
+  /** One row per link of a [[flat]] frame: `src_url` (the page url), the
+    * link's fields, then the `carry` columns. Its one spelling: the links
+    * sidecar and the link-reading queries both explode through it. */
+  private[graft] def linkRows(flat: DataFrame, carry: String*): DataFrame =
+    flat.select(col("url").as("src_url") +: explode(col("links")).as("l") +:
+        carry.map(col): _*)
+      .select(col("src_url") +: col("l.*") +: carry.map(col): _*)
+
   final case class RunSummary(docs: Long, failures: Long, buckets: Int)
 
   /** The one bucket-partitioned write of the pipeline: `url_bucket`
@@ -392,9 +406,8 @@ object Extract {
     // stale buckets into this run's sidecars, metrics, ledger, and summary.
     val bucketAcc = new BucketSetAccumulator
     spark.sparkContext.register(bucketAcc, "graft.run.buckets")
-    val extracted = extract(current, numBuckets, pivotYear)
-      .map { p => bucketAcc.add(p.doc.url_bucket); p }
-      .select(col("doc.*"), col("meta"), col("links"), col("anchors"))
+    val extracted = flat(extract(current, numBuckets, pivotYear)
+      .map { p => bucketAcc.add(p.doc.url_bucket); p })
     // repartition on the REMAPPED bucket key ([[bijectiveBucketRemap]]):
     // plain hash-repartition on url_bucket collides n small ints into n
     // slots and the write stage then runs at its most-collided task's
@@ -447,8 +460,7 @@ object Extract {
     // job descriptions are thread-local, failures rethrow via Await).
     val sidecarJobs: Seq[(String, DataFrame)] = Seq(
       "doc_meta" -> written.select($"meta.*", $"url_bucket"),
-      "links" -> written.select($"url".as("src_url"), explode($"links").as("l"), $"url_bucket")
-        .select($"src_url", $"l.*", $"url_bucket"),
+      "links" -> linkRows(written, "url_bucket"),
       "anchors" -> written.select($"url", explode($"anchors").as("anchor_id"), $"url_bucket"),
       "metrics" -> metrics)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(sidecarJobs.size)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.SparkEntry.{HostAuthorityRegex, extractedPersisted, side, t}
 import graft.ops.{LinkGraph, Skew}
+import graft.pipeline.Extract
 
 /** The link-graph domain: queries over `LinkGraph` or the link edges of
   * the shared extraction pass, with the corpora only they read. */
@@ -11,11 +12,8 @@ object Graph {
 
   /** (src_url, dst_url) of every extracted link, from the session's one
     * persisted extraction pass. */
-  private def linkEdges(s: SparkSession): DataFrame = {
-    import s.implicits._
-    extractedPersisted(s).flatMap(p => p.links.map(l => (p.doc.url, l.dst_url)))
-      .toDF("src_url", "dst_url")
-  }
+  private def linkEdges(s: SparkSession): DataFrame =
+    Extract.linkRows(extractedPersisted(s)).select(col("src_url"), col("dst_url"))
 
   /** Deterministic link-exchange corpus for q_mutual_hosts: page edges
     * derived from doc_id arithmetic (i%40 → 3i%40), which plants mutual
@@ -63,14 +61,12 @@ object Graph {
 
   val queries: Seq[Query] = Seq(
     Query("q_link_report", (s, _) => {
-      import s.implicits._
       val ex = extractedPersisted(s) // ONE extraction pass feeds all 3 frames
-      val urls = ex.map(_.doc.url).toDF("url")
-      val links = ex.flatMap(p => p.links.map(l =>
-        (p.doc.url, l.dst_url, l.kind, l.anchor))).toDF("src_url", "dst_url", "kind", "anchor")
-      val anchors = ex.flatMap(p => p.anchors.map(a => (p.doc.url, a)))
-        .toDF("url", "anchor_id")
-      LinkGraph.integrityReport(links, urls, anchors)
+      LinkGraph.integrityReport(
+        Extract.linkRows(ex).select(col("src_url"), col("dst_url"), col("kind"),
+          col("anchor")),
+        ex.select(col("url")),
+        ex.select(col("url"), explode(col("anchors")).as("anchor_id")))
     },
       s"""WITH l AS (SELECT * FROM ${side("side_links")}),
          |u AS (SELECT url FROM ${side("side_urls")}),
@@ -89,11 +85,9 @@ object Graph {
          |  CAST(sum(CASE WHEN has_anchor AND target_exists AND NOT anchor_exists THEN 1 ELSE 0 END) AS BIGINT) AS missing_anchors
          |FROM j GROUP BY dst_host""".stripMargin),
     Query("q_canonical_groups", (s, _) => {
-      import s.implicits._
       val ex = extractedPersisted(s)
-      val urls = ex.map(_.doc.url).toDF("url")
-      val meta = ex.map(p => (p.meta.url, p.meta.canonical)).toDF("url", "canonical")
-      LinkGraph.canonicalGroups(urls, meta)
+      LinkGraph.canonicalGroups(ex.select(col("url")),
+        ex.select(col("meta.url"), col("meta.canonical")))
     },
       s"""WITH urls AS (SELECT url FROM ${side("side_urls")}),
          |meta AS (SELECT url, canonical FROM ${side("side_meta")}),
@@ -297,15 +291,12 @@ object Graph {
          |SELECT url, CAST(min(depth) AS INT) AS depth
          |FROM r GROUP BY 1""".stripMargin),
     Query("q_link_spam", (s, _) => {
-      import s.implicits._
       // per-page link-spam signals; oracle = side_docs LEFT JOIN the
       // side_links rollup with the same cross-multiplied flags
       val ex = extractedPersisted(s)
-      val docs = ex.map(p => (p.doc.url, p.doc.text)).toDF("url", "__text")
-        .select(col("url"), length(col("__text")).as("text_len"))
-      val links = ex.flatMap(p => p.links.map(l =>
-        (p.doc.url, l.is_internal))).toDF("src_url", "is_internal")
-      LinkGraph.linkSpamScores(docs, links)
+      LinkGraph.linkSpamScores(
+        ex.select(col("url"), length(col("text")).as("text_len")),
+        Extract.linkRows(ex).select(col("src_url"), col("is_internal")))
     },
       s"""WITH l AS (SELECT src_url, CAST(count(*) AS BIGINT) AS nl,
          |    CAST(sum(CASE WHEN NOT is_internal THEN 1 ELSE 0 END)

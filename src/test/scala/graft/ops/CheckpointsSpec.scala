@@ -1,13 +1,13 @@
 package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.pipeline.SparkTestBase
+import graft.pipeline.{SparkTestBase, TempDirs}
 
 /** Checkpoints.truncate: the conf-gated reliable-checkpoint mode must
   * produce the SAME plan shape as the local default (a materialized RDD
   * leaf — the lineage-truncation property the iterative ops depend on)
   * and identical results; only where the bytes live differs. */
-class CheckpointsSpec extends AnyFunSuite {
+class CheckpointsSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -20,7 +20,7 @@ class CheckpointsSpec extends AnyFunSuite {
       .groupBy($"u").count() // a shuffle, so truncation is observable
     val local = Checkpoints.truncate(df.toDF())
     assert(leafName(local) == "LogicalRDD", leafName(local))
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = tempDir("graft-ckpt")
     spark.conf.set(Checkpoints.ConfKey, dir)
     try {
       val reliable = Checkpoints.truncate(df.toDF())
@@ -36,7 +36,7 @@ class CheckpointsSpec extends AnyFunSuite {
       .toDF("src", "dst")
     val base = LinkGraph.pageRank(edges, 2, 0.85, localFinishEdges = 0L).collect()
       .map(r => (r.getString(0), r.getDouble(1))).toMap
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt2").toString
+    val dir = tempDir("graft-ckpt2")
     spark.conf.set(Checkpoints.ConfKey, dir)
     try {
       val rel = LinkGraph.pageRank(edges, 2, 0.85, localFinishEdges = 0L).collect()

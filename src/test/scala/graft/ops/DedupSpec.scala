@@ -2,13 +2,13 @@ package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.pipeline.SparkTestBase
+import graft.pipeline.{SparkTestBase, TempDirs}
 import org.apache.spark.sql.graftbridge.CacheEntries
 
 /** Dedup operators over a synthetic corpus with PLANTED exact and near
   * duplicates (testdata documents are all unique, so the operators' recall
   * is proven here). */
-class DedupSpec extends AnyFunSuite {
+class DedupSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -70,7 +70,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("incremental LSH over a persisted band index round-trips") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bandidx").toString
+    val dir = tempDir("graft_bandidx")
     val oldDocs = docs.filter(pmod($"doc_id", lit(2)) === 0)
     val newDocs = docs.filter(pmod($"doc_id", lit(2)) === 1)
     Dedup.writeBandIndex(oldDocs, "doc_id", "text", dir,

@@ -2,9 +2,9 @@ package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.pipeline.SparkTestBase
+import graft.pipeline.{SparkTestBase, TempDirs}
 
-class SimilaritySpec extends AnyFunSuite {
+class SimilaritySpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -48,7 +48,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("persisted index: lshTopKIndexed prunes partitions and matches the on-the-fly path") {
-    val path = java.nio.file.Files.createTempDirectory("graft_ann_idx").toString
+    val path = tempDir("graft_ann_idx")
     Similarity.writeBucketed(emb, path, "embedding", bits = 8)
     val indexed = Similarity.lshTopKIndexed(spark, path, "vec_id", "embedding",
       q, 5, bits = 8, nProbes = 6)
@@ -66,7 +66,7 @@ class SimilaritySpec extends AnyFunSuite {
     val cents = Similarity.trainIvfCentroids(emb, "vec_id", "embedding", k = 8, iters = 5)
     val cents2 = Similarity.trainIvfCentroids(emb, "vec_id", "embedding", k = 8, iters = 5)
     assert(cents.map(_.toSeq).toSeq == cents2.map(_.toSeq).toSeq) // deterministic
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_idx").toString + "/idx"
+    val path = tempDir("graft_ivf_idx") + "/idx"
     Similarity.writeIvf(emb, path, "embedding", cents)
     val top = Similarity.ivfTopK(spark, path, "vec_id", "embedding", q, 5, cents, nProbes = 3)
     val plan = top.queryExecution.executedPlan.toString

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** The Iceberg-bucket(url) story, demonstrated locally with Spark bucketed
   * tables: url-keyed dedup/joins over a `bucketBy(url)` table plan WITHOUT
   * a shuffle exchange on the payload side (SURVEY §4.2). */
-class BucketedSpec extends AnyFunSuite {
+class BucketedSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -15,7 +15,7 @@ class BucketedSpec extends AnyFunSuite {
     spark.sql("DROP TABLE IF EXISTS pages_bucketed")
     PagesGen.pages(spark, 200L)
       .write.bucketBy(8, "url").sortBy("url")
-      .option("path", java.nio.file.Files.createTempDirectory("graft_bucket").toString)
+      .option("path", tempDir("graft_bucket"))
       .saveAsTable("pages_bucketed")
 
     val t = spark.table("pages_bucketed").as[PageRow]
@@ -31,7 +31,7 @@ class BucketedSpec extends AnyFunSuite {
     // prev side is docs_clean-shaped: the compare must read ONLY
     // (url, content_sha256, size) — ~60 B/row — from it (SURVEY §4.2:
     // change detection never shuffles payloads)
-    val dir = java.nio.file.Files.createTempDirectory("graft_prev_proj").toString + "/prev"
+    val dir = tempDir("graft_prev_proj") + "/prev"
     PagesGen.pages(spark, 50L)
       .select($"url", sha2($"html", 256).as("content_sha256"),
         length($"html").cast("long").as("size"), $"html".as("cleaned_html"),

@@ -2,12 +2,11 @@ package graft.pipeline
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** End-to-end pipeline over the synthetic pages table (FIXTURES §5.4):
   * counts, latest-wins dedup, change-detection join, metrics sidecar,
   * resume idempotence. */
-class ExtractE2ESpec extends AnyFunSuite {
+class ExtractE2ESpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -27,7 +26,7 @@ class ExtractE2ESpec extends AnyFunSuite {
   }
 
   test("full run: extracts every kind, zero failures, metrics add up") {
-    val out = Files.createTempDirectory("graft_e2e").toString
+    val out = tempDir("graft_e2e")
     val summary = Extract.run(spark, PagesGen.pages(spark, N), out, "run1")
     assert(summary.docs == N) // dedup to latest per url
     assert(summary.failures == 0)
@@ -96,7 +95,7 @@ class ExtractE2ESpec extends AnyFunSuite {
   }
 
   test("changed-only join drops unchanged re-captures and keeps new/changed") {
-    val out = Files.createTempDirectory("graft_prev").toString
+    val out = tempDir("graft_prev")
     // snapshot 1 = first 100 pages (base version only: latest-per-url of i<100)
     val snap1 = Extract.latestPerUrl(PagesGen.pages(spark, 100L))
     Extract.run(spark, snap1, out, "prev_run")
@@ -116,7 +115,7 @@ class ExtractE2ESpec extends AnyFunSuite {
   }
 
   test("changed-only: null current html reads as CHANGED (can't check => assume changed)") {
-    val out = Files.createTempDirectory("graft_prevnull").toString
+    val out = tempDir("graft_prevnull")
     val snap1 = Extract.latestPerUrl(PagesGen.pages(spark, 20L))
     Extract.run(spark, snap1, out, "prevnull_run")
     val prev = spark.read.parquet(s"$out/docs_clean")
@@ -131,13 +130,13 @@ class ExtractE2ESpec extends AnyFunSuite {
   }
 
   test("recrawl with no changed page: empty summary, and the outDir stays usable") {
-    val prevOut = Files.createTempDirectory("graft_nochange_prev").toString
+    val prevOut = tempDir("graft_nochange_prev")
     val snap = Extract.latestPerUrl(PagesGen.pages(spark, 40L))
     Extract.run(spark, snap, prevOut, "nochange_prev")
     val prev = spark.read.parquet(s"$prevOut/docs_clean")
     // every page unchanged → the changed-only delta is empty, the docs_clean
     // write leaves no file, and the read-back must not infer a schema
-    val out = Files.createTempDirectory("graft_nochange").toString
+    val out = tempDir("graft_nochange")
     val s0 = Extract.run(spark, snap, out, "nochange_r1", prevSnapshot = Some(prev))
     assert(s0 == Extract.RunSummary(0, 0, Extract.DefaultBuckets))
     // a non-empty run into the same outDir afterwards still succeeds
@@ -147,7 +146,7 @@ class ExtractE2ESpec extends AnyFunSuite {
   }
 
   test("reused outDir, new runId: metrics/ledger/summary cover only THIS run's buckets") {
-    val out = Files.createTempDirectory("graft_reuse").toString
+    val out = tempDir("graft_reuse")
     // run 1 fills many buckets
     val s1 = Extract.run(spark, Extract.latestPerUrl(PagesGen.pages(spark, 120L)),
       out, "reuse_r1")
@@ -179,7 +178,7 @@ class ExtractE2ESpec extends AnyFunSuite {
   }
 
   test("resume: completed buckets are skipped; outputs stay identical") {
-    val out = Files.createTempDirectory("graft_resume").toString
+    val out = tempDir("graft_resume")
     val pages = PagesGen.pages(spark, N)
     Extract.run(spark, pages, out, "runA")
     val before = spark.read.parquet(s"$out/docs_clean")
@@ -221,7 +220,7 @@ class ExtractE2ESpec extends AnyFunSuite {
     val pages = PagesGen.pages(spark, 60L).union(spark.createDataset(Seq(
       PageRow(null, ts, PagesGen.htmlOf(1L, 7L).getBytes("UTF-8"), null, "en"))))
     for (done <- Seq(0, 10)) {
-      val out = Files.createTempDirectory(s"graft_resume_null$done").toString
+      val out = tempDir(s"graft_resume_null$done")
       Extract.run(spark, pages, out, "nullA")
       def byBucket() = spark.read.parquet(s"$out/docs_clean")
         .groupBy($"url_bucket").count().as[(Int, Long)].collect().toMap
@@ -239,7 +238,7 @@ class ExtractE2ESpec extends AnyFunSuite {
   }
 
   test("bucket-aligned input: exchange-free write path produces identical outputs") {
-    val in = Files.createTempDirectory("graft_aligned_in").toString + "/pages"
+    val in = tempDir("graft_aligned_in") + "/pages"
     PagesGen.pages(spark, 80L)
       .withColumn("url_bucket", pmod(xxhash64($"url"), lit(16)).cast("int"))
       .repartition(16, $"url_bucket")
@@ -247,8 +246,8 @@ class ExtractE2ESpec extends AnyFunSuite {
     val aligned = spark.read.parquet(in)
       .select("url", "warc_ts", "html", "text", "lang").as[PageRow]
 
-    val outA = Files.createTempDirectory("graft_aligned_a").toString
-    val outB = Files.createTempDirectory("graft_aligned_b").toString
+    val outA = tempDir("graft_aligned_a")
+    val outB = tempDir("graft_aligned_b")
     Extract.run(spark, aligned, outA, "runAl", repartitionForWrite = false)
     Extract.run(spark, PagesGen.pages(spark, 80L), outB, "runDef")
     def snap(dir: String) = spark.read.parquet(s"$dir/docs_clean")
@@ -262,7 +261,7 @@ class ExtractE2ESpec extends AnyFunSuite {
   }
 
   test("blocklist anti-join removes listed urls") {
-    val out = Files.createTempDirectory("graft_bl").toString
+    val out = tempDir("graft_bl")
     val bl = spark.createDataset(Seq(PagesGen.urlOf(3), PagesGen.urlOf(4)))
     val s = Extract.run(spark, PagesGen.pages(spark, 50L), out, "runBL",
       blocklist = Some(bl))

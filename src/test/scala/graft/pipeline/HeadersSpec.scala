@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * data/db_manager.py:32-33, core/scraper.py:580-621): missing stored row
   * ⇒ changed; any-of-three field diff ⇒ changed; None == None ⇒ unchanged;
   * header-unchanged rows skip extraction entirely. */
-class HeadersSpec extends AnyFunSuite {
+class HeadersSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -51,7 +51,7 @@ class HeadersSpec extends AnyFunSuite {
   }
 
   test("sidecar write: INSERT OR REPLACE per url — partial refresh loses nothing") {
-    val dir = s"/tmp/graft_headers_spec_${System.nanoTime()}"
+    val dir = tempDir("graft_headers_spec") + "/sidecar"
     // a url PROVABLY sharing u2's bucket — the case the old bucket-wipe
     // write lost on refresh
     val u2Bucket = Extract.urlBucket("u2", 4)

@@ -1,13 +1,13 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.pipeline.{PagesGen, SparkTestBase}
+import graft.pipeline.{PagesGen, SparkTestBase, TempDirs}
 
 /** Warc: record grammar (version line, headers, Content-Length payload,
   * CRLF CRLF), obs-fold + case-insensitive headers, failure isolation
   * with resync, multi-member gzip, the HTTP response envelope, and the
   * pages() projection agreeing byte-for-byte with PagesGen. */
-class WarcSpec extends AnyFunSuite {
+class WarcSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestBase.spark
 
@@ -151,7 +151,7 @@ class WarcSpec extends AnyFunSuite {
     import spark.implicits._
     val files = Warc.syntheticWarcFrame(spark, 24, withBroken = true,
       gzipMembers = true)
-    val dir = java.nio.file.Files.createTempDirectory("graft-warcidx").toString
+    val dir = tempDir("graft-warcidx")
     Warc.writeRecordIndex(files, dir)
     val index = spark.read.parquet(dir)
     // prune to response records only — the re-extraction-of-a-subset shape

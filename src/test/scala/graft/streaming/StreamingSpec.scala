@@ -2,18 +2,17 @@ package graft.streaming
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.pipeline.{PagesGen, SparkTestBase}
-import java.nio.file.Files
+import graft.pipeline.{PagesGen, SparkTestBase, TempDirs}
 
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   test("streaming extraction drains a backlog with AvailableNow, exactly once") {
-    val in = Files.createTempDirectory("graft_stream_in").toString
-    val out = Files.createTempDirectory("graft_stream_out").toString
-    val ckpt = Files.createTempDirectory("graft_stream_ckpt").toString
+    val in = tempDir("graft_stream_in")
+    val out = tempDir("graft_stream_out")
+    val ckpt = tempDir("graft_stream_ckpt")
     PagesGen.pages(spark, 60L).repartition(4).write.mode("append").parquet(in)
 
     val q1 = StreamingExtract.extractStream(spark, in, out, ckpt)
@@ -35,9 +34,9 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming WARC ingestion: new archives drain exactly once") {
-    val in = Files.createTempDirectory("graft_warc_in").toString
-    val out = Files.createTempDirectory("graft_warc_out").toString
-    val ckpt = Files.createTempDirectory("graft_warc_ckpt").toString
+    val in = tempDir("graft_warc_in")
+    val out = tempDir("graft_warc_out")
+    val ckpt = tempDir("graft_warc_ckpt")
     // one archive with pages 0..19
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$in/a.warc"),
       graft.sources.Warc.syntheticWarcBytes(20))
@@ -112,9 +111,9 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming training-prep: cross-batch dedup state, gates, exactly-once") {
-    val in = Files.createTempDirectory("graft_tpin").toString
-    val outDir = Files.createTempDirectory("graft_tpout").toString
-    val ckpt = Files.createTempDirectory("graft_tpckpt").toString
+    val in = tempDir("graft_tpin")
+    val outDir = tempDir("graft_tpout")
+    val ckpt = tempDir("graft_tpckpt")
     val goodText = "the quick brown fox jumps over the lazy dog again and again ok"
 
     // batch 1: keeper (id 1), short doc, wrong lang
@@ -175,9 +174,9 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stateful dedup stream emits only new/changed snapshots") {
-    val in = Files.createTempDirectory("graft_sdin").toString
-    val outDir = Files.createTempDirectory("graft_sdout").toString
-    val ckpt = Files.createTempDirectory("graft_sdckpt").toString
+    val in = tempDir("graft_sdin")
+    val outDir = tempDir("graft_sdout")
+    val ckpt = tempDir("graft_sdckpt")
     PagesGen.pages(spark, 50L).repartition(2).write.mode("append").parquet(in)
 
     val changed = StreamingExtract.dedupStream(StreamingExtract.readPages(spark, in))
