@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, Similarity}
 import graft.pipeline.{Extract, PagesGen}
+import graft.queries.{Crawl, Media}
 
 /**
  * Materializes the oracle SIDE TABLES `SparkEntry.oracleSql` references
@@ -99,7 +100,7 @@ object SideTables {
     val rbRobots = graft.ops.Frontier.syntheticRobots(rbFrontier, "host")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     save(rbRobots.join(
-      graft.ops.Frontier.hostPolicies(rbRobots, SparkEntry.RobotsAgent)
+      graft.ops.Frontier.hostPolicies(rbRobots, Crawl.RobotsAgent)
         .select($"host", $"parse_failed"), Seq("host"))
       .select($"host", $"status", $"parse_failed"), "side_rb_hosts")
     val (rbEntries, rbAgents, rbRules) =
@@ -123,23 +124,17 @@ object SideTables {
 
     // ---- per-row scalar frames (deterministic recompute gates) ----
     save(SparkEntry.boilerFrame(spark), "side_boiler")
-    save(SparkEntry.mediaFrame(spark), "side_media")
+    save(Media.features(spark), "side_media")
     // raw payload hex: the oracle re-derives kind + PNG/GIF fixed-offset
     // dims + the JPEG marker chain + the WAV chunk walk from these bytes
-    save(graft.ops.Multimodal.syntheticMedia(spark, 200)
-      .select($"media_id", hex($"payload").as("ph")), "side_media_raw")
+    save(Media.corpus(spark).select($"media_id", hex($"payload").as("ph")),
+      "side_media_raw")
     // raw resized payloads / frame windows — the oracle recomputes
     // octet_length + md5(hex(...)) from the bytes themselves
-    save(graft.ops.Multimodal.withResized(
-        graft.ops.Multimodal.syntheticMedia(spark, 200), "payload", 32, 24)
-      .select($"media_id", $"resized",
+    save(Media.resized(spark).select($"media_id", $"resized",
         $"resized_meta.width".as("width"), $"resized_meta.height".as("height")),
       "side_resized")
-    save(graft.ops.Multimodal.explodeFrames(
-        graft.ops.Multimodal.withSampledFrames(
-          graft.ops.Multimodal.syntheticMedia(spark, 100), "payload", 4, 40L),
-        "media_id"),
-      "side_frames")
+    save(Media.frames(spark), "side_frames")
     save(SparkEntry.textstatsFrame(spark, sfDir)
       .select($"doc_id", $"lang_detected"), "side_textstats")
     // zlib level-6 size per doc: the pinned scalar for

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, Similarity}
 import graft.pipeline.{Extract, PagesGen}
-import graft.queries.{Graph, Query}
+import graft.queries.{Crawl, Graph, Media, Query}
 
 /**
  * Driver contract (SURVEY §5.3): every operator from the SURVEY §2
@@ -29,16 +29,13 @@ import graft.queries.{Graph, Query}
 object SparkEntry {
 
   /** Where Verify materializes the oracle side tables; the oracle SQL
-    * references it by absolute path (read_parquet). */
+    * references it by absolute path (read_parquet). The queries' own
+    * artifacts (ANN and IVF indexes, the JSONL round trip) live here too. */
   val sideDir: String = sys.env.getOrElse("GRAFT_SIDE_DIR", "/tmp/graft_side")
 
   /** Rows of the synthetic pages table the extraction queries/side tables
     * run over (one `Extract.run` feeds every extraction side table). */
   private[graft] val ExtractN = 200L
-
-  /** Crawl identity for q_robots_filter; its lowered product token
-    * ("graftbot") is a LITERAL in the DuckDB oracle — keep in sync. */
-  private[graft] val RobotsAgent = "GraftBot/1.0 (+https://graft.example/bot)"
 
   /** Pages in the synthetic WARC archive (q_warc_records + side_warc_*). */
   private[graft] val WarcN = 120
@@ -83,22 +80,6 @@ object SparkEntry {
       Extract.flat(Extract.extract(Extract.latestPerUrl(PagesGen.pages(k, ExtractN))))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
-
-  /** The crawl frontier of the shared pass: its distinct link destinations
-    * (`url`) with an md5-derived deterministic `priority_score` in
-    * [0, 1000). A reader that never reads the score prunes it away. */
-  private def frontierView(s: SparkSession): DataFrame =
-    Extract.linkRows(extractedPersisted(s)).select(col("dst_url").as("url"))
-      .distinct()
-      .withColumn("priority_score",
-        pmod(conv(substring(md5(col("url")), 1, 8), 16, 10).cast("long"),
-          lit(1000L)).cast("int"))
-
-  /** The synthetic robots corpus over the frontier's hosts (the same
-    * `try_parse_url` host [[graft.ops.Frontier.frontierPaths]] derives). */
-  private def frontierRobots(frontier: DataFrame): DataFrame =
-    graft.ops.Frontier.syntheticRobots(
-      frontier.select(expr("try_parse_url(url, 'HOST')").as("host")))
 
   /** Snapshot pairs of every changed url (old/new decoded content).
     * Shuffle-slim (VERDICT r02 wrong #4): the min/max aggregate runs over
@@ -155,38 +136,6 @@ object SparkEntry {
       }.toDF("url", "blocks", "stripped_elements", "main_chars")
   }
 
-  private[graft] def mediaFrame(s: SparkSession): DataFrame = {
-    val media = graft.ops.Multimodal.syntheticMedia(s, 200)
-    graft.ops.Multimodal.withMediaFeatures(media, "payload")
-      .select(col("media_id"), col("media_meta.kind").as("kind"),
-        col("media_meta.width").as("width"), col("media_meta.height").as("height"),
-        col("media_meta.sample_rate").as("sample_rate"),
-        col("media_meta.channels").as("channels"),
-        col("media_meta.duration_ms").as("duration_ms"),
-        round(element_at(col("features"), 1), 5).as("f0"))
-  }
-
-  /** Resized media (stub transform, real metadata/plumbing): the oracle
-    * recomputes byte length + md5-over-hex from the raw resized payload. */
-  private[graft] def mediaResizedFrame(s: SparkSession): DataFrame =
-    graft.ops.Multimodal.withResized(
-        graft.ops.Multimodal.syntheticMedia(s, 200), "payload", 32, 24)
-      .select(col("media_id"),
-        col("resized_meta.width").as("width"),
-        col("resized_meta.height").as("height"),
-        col("resized_meta.n_bytes").as("n_bytes"),
-        md5(hex(col("resized"))).as("payload_md5h"))
-
-  /** Per-frame rows from the stub video sampler (4 frames @ 40ms). */
-  private[graft] def mediaFramesFrame(s: SparkSession): DataFrame =
-    graft.ops.Multimodal.explodeFrames(
-        graft.ops.Multimodal.withSampledFrames(
-          graft.ops.Multimodal.syntheticMedia(s, 100), "payload", 4, 40L),
-        "media_id")
-      .select(col("media_id"), col("frame_idx"), col("ts_ms"),
-        length(col("frame")).cast("long").as("n_bytes"),
-        md5(hex(col("frame"))).as("frame_md5h"))
-
   private[graft] def textstatsFrame(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     t(s, dir, "documents").select(col("doc_id"), col("lang"), col("text"))
@@ -239,13 +188,10 @@ object SparkEntry {
     t(s, dir, "embeddings").filter(col("vec_id") === 0)
       .select(col("embedding")).head().getSeq[Float](0).toArray
 
-  /** Persisted ANN index for the sf dir (built once, partition-pruned
-    * reads after — the scale path; VERDICT r01 wrong #3). */
-  private[graft] def annIndexPath(dir: String): String =
-    s"/tmp/graft_ann_idx_${Integer.toHexString((dir + "#b8s42").hashCode)}"
-
+  /** Persisted ANN index for the sf dir under `sideDir` (built once,
+    * partition-pruned reads after — the scale path; VERDICT r01 wrong #3). */
   private[graft] def ensureAnnIndex(s: SparkSession, dir: String): String = {
-    val path = annIndexPath(dir)
+    val path = s"$sideDir/ann_idx_${Integer.toHexString((dir + "#b8s42").hashCode)}"
     if (!new java.io.File(s"$path/_SUCCESS").exists())
       Similarity.writeBucketed(t(s, dir, "embeddings").filter(col("vec_id") =!= 0),
         path, "embedding", bits = 8)
@@ -259,7 +205,7 @@ object SparkEntry {
 
   private[graft] def ensureIvfIndex(s: SparkSession, dir: String,
                                     cents: Array[Array[Float]]): String = {
-    val path = s"/tmp/graft_ivf_idx_${Integer.toHexString((dir + "#k16i5").hashCode)}"
+    val path = s"$sideDir/ivf_idx_${Integer.toHexString((dir + "#k16i5").hashCode)}"
     if (!new java.io.File(s"$path/_SUCCESS").exists())
       Similarity.writeIvf(t(s, dir, "embeddings").filter(col("vec_id") =!= 0),
         path, "embedding", cents)
@@ -269,7 +215,7 @@ object SparkEntry {
   /** The queries held as [[graft.queries.Query]] values, one file per
     * domain; `queries` and `oracleSql` are the entries below plus views of
     * these. */
-  private def registry: Seq[Query] = Graph.queries
+  private def registry: Seq[Query] = Graph.queries ++ Crawl.queries ++ Media.queries
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Query.merged(registry, _.run)(Map(
     // ---- aggregations (SURVEY §2.5) ----
@@ -505,17 +451,6 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_docs"))
     }),
     "q_extract_links" -> ((s, _) => Extract.linkRows(extractedPersisted(s))),
-    "q_host_demote" -> ((s, _) => {
-      // failure taxonomy → next-plan feedback: the poisoned corpus's
-      // all-failing host must demote, every healthy host must not; the
-      // oracle re-derives failures from the INPUT structure (side_poison)
-      val docs = Extract.extract(PagesGen.poisonedPages(s, PoisonN))
-        .select(col("doc.*"))
-        .select(col("url"),
-          col("failure_class").isNotNull.cast("long").as("failed"))
-      graft.ops.Frontier.demoteFailingHosts(docs, "url", "failed",
-        maxFailedNum = 1, maxFailedDen = 5)
-    }),
     "q_extract_meta" -> ((s, _) => {
       import s.implicits._
       extractedPersisted(s)
@@ -538,32 +473,6 @@ object SparkEntry {
         }.toDF("url", "content_kind", "mirror_path", "raw_read_path")
     }),
     "q_snapshot_diff_ops" -> ((s, _) => snapshotDiffSummary(s)),
-    "q_frontier_schedule" -> ((s, _) => {
-      // politeness plan over the REAL extracted frontier (distinct link
-      // destinations): md5-derived deterministic priorities, 5 workers
-      // (the reference's --max_workers), 3000 ms (its --initial_delay)
-      graft.ops.Frontier.politenessSchedule(frontierView(s), numWorkers = 5,
-        delayMs = 3000L)
-    }),
-    "q_robots_filter" -> ((s, _) => {
-      // robots gate over the REAL extracted frontier against a
-      // deterministic synthetic robots corpus (one md5-assigned template
-      // per host — all 8 decision branches represented); the oracle
-      // re-derives agent→entry selection, the first-match prefix scan,
-      // and the read()-status flags relationally from the parsed tables
-      val frontier = frontierView(s)
-      graft.ops.Frontier.robotsFilter(frontier, frontierRobots(frontier),
-        RobotsAgent)
-    }),
-    "q_crawl_plan" -> ((s, _) => {
-      // the composed pre-fetch plan: robots gate -> per-host clamped
-      // crawl-delay -> politeness schedule, over the real extracted
-      // frontier; the oracle composes the q_robots_filter and
-      // q_frontier_schedule derivations end-to-end
-      val frontier = frontierView(s)
-      graft.ops.Frontier.crawlPlan(frontier, frontierRobots(frontier),
-        RobotsAgent)
-    }),
     "q_warc_records" -> ((s, _) => {
       // raw Common-Crawl-shaped ingestion: the synthetic WARC archive
       // (one broken record for the resync probe) scanned into records +
@@ -611,9 +520,6 @@ object SparkEntry {
         "http_status", "mime", "body_len", "body_sha256")
     }),
     "q_boilerplate_main" -> ((s, _) => boilerFrame(s)),
-    "q_media_features" -> ((s, _) => mediaFrame(s)),
-    "q_media_resize" -> ((s, _) => mediaResizedFrame(s)),
-    "q_media_frames" -> ((s, _) => mediaFramesFrame(s)),
 
     // ---- dedup / fingerprints / text stats (oracled via side tables) ----
     "q_minhash_lsh_pairs" -> ((s, dir) => {
@@ -690,11 +596,10 @@ object SparkEntry {
       val d = t(s, dir, "documents")
         .select(col("doc_id"), col("text"), col("lang"), col("source"),
           col("n_chars"))
-      // per-sfDir output path (+ env override): two concurrent runs over
-      // different sf dirs must not race on one fixed /tmp dir — one run's
-      // overwrite could delete files the other is reading back (ADVICE r5)
-      val out = sys.env.getOrElse("GRAFT_JSONL_DIR",
-        s"/tmp/graft_jsonl_${Integer.toHexString(dir.hashCode)}") + "/documents"
+      // per-sfDir output path: two concurrent runs over different sf dirs
+      // must not race on one fixed dir — one run's overwrite could delete
+      // files the other is reading back (ADVICE r5)
+      val out = s"$sideDir/jsonl_${Integer.toHexString(dir.hashCode)}/documents"
       graft.pipeline.JsonlSink.write(d, out)
       graft.pipeline.JsonlSink.read(s, out, d.schema)
     }),
@@ -820,27 +725,6 @@ object SparkEntry {
       graft.ops.TrainingData.sourceStats(srcDupCorpus(s, dir),
         dupNum = 1, dupDen = 5)),
 
-    // ---- crawl scheduling / sources (SURVEY §2.7 faithful + §2.1) ----
-    "q_priority_scores" -> ((s, _) => {
-      import s.implicits._
-      // history = the synthetic crawl snapshots; 'now' = newest + 1h
-      val hist = PagesGen.pages(s, ExtractN)
-        .select($"url", $"warc_ts".as("last_updated"))
-      val asOf = hist.agg(max(unix_timestamp($"last_updated").cast("double")))
-        .head().getDouble(0) + 3600.0
-      val perUrl = hist.groupBy($"url").agg(count(lit(1)).as("n"),
-        max(unix_timestamp($"last_updated").cast("double")).as("maxe"))
-      // hash_info analog: last_modified known only for re-crawled urls
-      val candidates = perUrl.select($"url",
-        $"url".rlike("page[0-9]*0\\.html$").as("is_pagination"),
-        when($"n" >= 2, $"maxe").otherwise(lit(null)).as("last_modified_epoch"))
-      graft.ops.Priority.scores(candidates, hist, asOf)
-    }),
-    "q_sitemap_seeds" -> ((s, _) =>
-      graft.sources.Sitemap.seedUrls(
-        graft.sources.Sitemap.syntheticSitemapPages(s),
-        "https://site.example.com/sitemap.xml")),
-
     // ---- snapshot time-travel + corpus shaping + corpus QA (r5) ----
     "q_asof_join" -> ((s, _) =>
       graft.ops.AsOfJoin.asofJoin(asofProbes(s), asofSnaps(s),
@@ -895,14 +779,6 @@ object SparkEntry {
         t(s, dir, "documents").select(col("source"),
           graft.ops.TrainingData.nTokens(col("text")).as("n_tokens")),
         "source", "n_tokens", Seq(0.5, 0.9, 0.99))),
-    "q_crawl_budget" -> ((s, dir) => {
-      // largest-remainder allocation of a 137-page budget across sources;
-      // prime budget forces nonzero remainders and a leftover
-      graft.ops.Frontier.allocateBudget(
-        t(s, dir, "documents").groupBy(col("source"))
-          .agg(count(lit(1)).as("n_pages")),
-        budget = 137L)
-    }),
     "q_quantize_int8" -> ((s, dir) =>
       // int8 ANN storage audit; every scalar re-derived from embeddings
       graft.ops.Similarity.quantizeInt8(t(s, dir, "embeddings"))),
@@ -910,26 +786,7 @@ object SparkEntry {
       // search OVER the quantized vectors: integer dot products, bit-exact
       // ranking; oracle re-quantizes corpus + query and re-ranks
       graft.ops.Similarity.int8TopK(t(s, dir, "embeddings"),
-        "vec_id", "embedding", queryVec(s, dir), k = 10)),
-    "q_url_patterns" -> ((s, _) =>
-      // crawl-trap families over the DISTINCT extracted link targets;
-      // the oracle re-runs the template collapse (same regexes, 'g')
-      // and host extraction over side_links
-      graft.ops.Frontier.urlPatternFamilies(frontierView(s), "url",
-        trapThreshold = 20L)),
-    "q_media_decode" -> ((s, _) =>
-      // REAL PNG pixel decode + area-average resize over the closed-form
-      // two-tone corpus; the oracle computes every decoded and resized
-      // channel sum by PURE ARITHMETIC from the id — no decoder in
-      // DuckDB, so any pixel-level decode error hash-fails
-      graft.ops.Multimodal.withDecodedSummary(
-        graft.ops.Multimodal.syntheticRealPngs(s, 200),
-        "media_id", "payload", targetW = 16, targetH = 8)),
-    "q_audio_decode" -> ((s, _) =>
-      // REAL 16-bit PCM decode; closed-form samples, arithmetic oracle
-      graft.ops.Multimodal.withDecodedAudio(
-        graft.ops.Multimodal.syntheticRealWavs(s, 200, samples = 256),
-        "media_id", "payload"))
+        "vec_id", "embedding", queryVec(s, dir), k = 10))
   ))
 
   /** Query set for q_bm25_topk — terms from the synthetic documents
@@ -1526,21 +1383,6 @@ object SparkEntry {
     "q_extract_links" ->
       s"""SELECT src_url, dst_url, kind, src_tag, anchor, is_internal
          |FROM ${side("side_links")}""".stripMargin,
-    "q_host_demote" ->
-      // failures re-derived from input structure (no-payload rows are the
-      // only failures in this corpus — q_failure_classes pins that);
-      // hosts via the lexical authority regex; exact cross-multiply fence
-      s"""WITH p AS (SELECT url,
-         |    CASE WHEN has_payload THEN 0 ELSE 1 END AS f
-         |  FROM ${side("side_poison")} WHERE url IS NOT NULL),
-         |h AS (SELECT lower(NULLIF(regexp_extract(url,
-         |    '$HostAuthorityRegex',
-         |    1), '')) AS host, f
-         |  FROM p)
-         |SELECT host, CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(f) AS BIGINT) AS n_failed,
-         |  sum(f) * 5 > count(*) * 1 AS demoted
-         |FROM h WHERE host IS NOT NULL GROUP BY 1""".stripMargin,
     "q_mirror_paths" ->
       // DuckDB re-derives the reference's save path (core/scraper.py:
       // 484-497) from (url, content_kind) with string functions only:
@@ -1589,154 +1431,6 @@ object SparkEntry {
       s"""SELECT url, title, description, keywords, last_modified_iso,
          |  canonical, lang, n_structured
          |FROM ${side("side_meta_full")}""".stripMargin,
-    "q_frontier_schedule" ->
-      // worker = md5-mod of host, fetch_seq = per-host priority window,
-      // est_start = exact integer wave arithmetic — the whole schedule
-      // re-derived from raw side_links rows (host via the lexical
-      // HostAuthorityRegex)
-      s"""WITH f AS (SELECT DISTINCT dst_url AS url FROM ${side("side_links")}),
-         |p AS (SELECT url,
-         |    CAST(CAST('0x' || substr(md5(url), 1, 8) AS BIGINT) % 1000 AS INT)
-         |      AS pr,
-         |    NULLIF(regexp_extract(url, '$HostAuthorityRegex', 1), '') AS host
-         |  FROM f),
-         |w AS (SELECT url, host, pr,
-         |    ROW_NUMBER() OVER (PARTITION BY host ORDER BY pr DESC, url)
-         |      AS fetch_seq
-         |  FROM p)
-         |SELECT url, host,
-         |  CAST(CAST('0x' || substr(md5('host:' || host), 1, 8) AS BIGINT) % 5
-         |    AS INT) AS worker,
-         |  fetch_seq, (fetch_seq - 1) * 3000 AS est_start_ms
-         |FROM w""".stripMargin,
-    "q_robots_filter" ->
-      // the parse layer (side_rb_* tables + match_path) is the
-      // CPython-fuzz-pinned input; DuckDB independently re-derives entry
-      // selection (substring agent match, min file-order, default
-      // fallback), the first-match prefix scan, the read()-status flags,
-      // the decision taxonomy, and the crawl-delay projection
-      s"""WITH f AS (SELECT url, match_path, host FROM ${side("side_rb_frontier")}),
-         |h AS (SELECT host, status, parse_failed FROM ${side("side_rb_hosts")}),
-         |e AS (SELECT host, entry_seq, delay_s, rate_req, rate_secs
-         |      FROM ${side("side_rb_entries")}),
-         |a AS (SELECT host, entry_seq, agent_lower FROM ${side("side_rb_agents")}),
-         |r AS (SELECT host, entry_seq, rule_seq, prefix, is_allow FROM ${side("side_rb_rules")}),
-         |spec AS (SELECT host, min(entry_seq) AS es FROM a
-         |         WHERE entry_seq >= 0
-         |           AND (agent_lower = '*' OR contains('graftbot', agent_lower))
-         |         GROUP BY host),
-         |dflt AS (SELECT DISTINCT host, -1 AS es FROM e WHERE entry_seq = -1),
-         |sel AS (SELECT h.host, coalesce(s.es, d.es) AS es
-         |        FROM h LEFT JOIN spec s ON h.host = s.host
-         |               LEFT JOIN dflt d ON h.host = d.host),
-         |fm AS (SELECT f.url, min(r.rule_seq) AS rs
-         |       FROM f JOIN sel ON f.host = sel.host
-         |            JOIN r ON r.host = f.host AND r.entry_seq = sel.es
-         |       WHERE r.prefix = '*' OR starts_with(f.match_path, r.prefix)
-         |       GROUP BY f.url)
-         |SELECT f.url, f.host, f.match_path,
-         |  CASE WHEN h.host IS NULL THEN TRUE
-         |       WHEN h.parse_failed THEN FALSE
-         |       WHEN h.status IN (401, 403) THEN FALSE
-         |       WHEN h.status >= 400 AND h.status < 500 THEN TRUE
-         |       WHEN h.status >= 500 THEN FALSE
-         |       WHEN sel.es IS NULL THEN TRUE
-         |       WHEN fm.rs IS NOT NULL THEN mr.is_allow
-         |       ELSE TRUE END AS allowed,
-         |  CASE WHEN h.host IS NULL THEN 'no_robots'
-         |       WHEN h.parse_failed THEN 'parse_failed'
-         |       WHEN h.status IN (401, 403) THEN 'disallow_all'
-         |       WHEN h.status >= 400 AND h.status < 500 THEN 'allow_all'
-         |       WHEN h.status >= 500 THEN 'unread'
-         |       WHEN sel.es IS NULL THEN 'no_entry'
-         |       WHEN fm.rs IS NOT NULL THEN 'rule'
-         |       ELSE 'entry_default' END AS decision,
-         |  CASE WHEN h.host IS NOT NULL AND NOT h.parse_failed
-         |        AND h.status < 400 AND sel.es IS NOT NULL
-         |       THEN ed.delay_s END AS crawl_delay_s,
-         |  CASE WHEN h.host IS NOT NULL AND NOT h.parse_failed
-         |        AND h.status < 400 AND sel.es IS NOT NULL
-         |       THEN ed.rate_req END AS rate_req,
-         |  CASE WHEN h.host IS NOT NULL AND NOT h.parse_failed
-         |        AND h.status < 400 AND sel.es IS NOT NULL
-         |       THEN ed.rate_secs END AS rate_secs
-         |FROM f
-         |LEFT JOIN h ON f.host = h.host
-         |LEFT JOIN sel ON f.host = sel.host
-         |LEFT JOIN fm ON f.url = fm.url
-         |LEFT JOIN r mr ON mr.host = f.host AND mr.entry_seq = sel.es
-         |                AND mr.rule_seq = fm.rs
-         |LEFT JOIN e ed ON ed.host = f.host AND ed.entry_seq = sel.es""".stripMargin,
-    "q_crawl_plan" ->
-      // q_robots_filter's allowed/delay derivation composed with
-      // q_frontier_schedule's worker/wave arithmetic, end to end in one
-      // DuckDB statement over the same side tables
-      s"""WITH f AS (SELECT url, match_path, host FROM ${side("side_rb_frontier")}),
-         |h AS (SELECT host, status, parse_failed FROM ${side("side_rb_hosts")}),
-         |e AS (SELECT host, entry_seq, delay_s, rate_req, rate_secs
-         |      FROM ${side("side_rb_entries")}),
-         |a AS (SELECT host, entry_seq, agent_lower FROM ${side("side_rb_agents")}),
-         |r AS (SELECT host, entry_seq, rule_seq, prefix, is_allow FROM ${side("side_rb_rules")}),
-         |spec AS (SELECT host, min(entry_seq) AS es FROM a
-         |         WHERE entry_seq >= 0
-         |           AND (agent_lower = '*' OR contains('graftbot', agent_lower))
-         |         GROUP BY host),
-         |dflt AS (SELECT DISTINCT host, -1 AS es FROM e WHERE entry_seq = -1),
-         |sel AS (SELECT h.host, coalesce(s.es, d.es) AS es
-         |        FROM h LEFT JOIN spec s ON h.host = s.host
-         |               LEFT JOIN dflt d ON h.host = d.host),
-         |fm AS (SELECT f.url, min(r.rule_seq) AS rs
-         |       FROM f JOIN sel ON f.host = sel.host
-         |            JOIN r ON r.host = f.host AND r.entry_seq = sel.es
-         |       WHERE r.prefix = '*' OR starts_with(f.match_path, r.prefix)
-         |       GROUP BY f.url),
-         |dec AS (SELECT f.url, f.host,
-         |    CASE WHEN h.host IS NULL THEN TRUE
-         |         WHEN h.parse_failed THEN FALSE
-         |         WHEN h.status IN (401, 403) THEN FALSE
-         |         WHEN h.status >= 400 AND h.status < 500 THEN TRUE
-         |         WHEN h.status >= 500 THEN FALSE
-         |         WHEN sel.es IS NULL THEN TRUE
-         |         WHEN fm.rs IS NOT NULL THEN mr.is_allow
-         |         ELSE TRUE END AS allowed,
-         |    CASE WHEN h.host IS NOT NULL AND NOT h.parse_failed
-         |          AND h.status < 400 AND sel.es IS NOT NULL
-         |         THEN ed.delay_s END AS delay_s,
-         |    CASE WHEN h.host IS NOT NULL AND NOT h.parse_failed
-         |          AND h.status < 400 AND sel.es IS NOT NULL
-         |          AND ed.rate_req > 0
-         |         THEN CASE
-         |           WHEN ed.rate_secs // ed.rate_req >= 5 THEN 5000
-         |           WHEN ed.rate_req > 1000000000000000
-         |             THEN ed.rate_secs // (ed.rate_req // 1000)
-         |           ELSE (ed.rate_secs * 1000 + ed.rate_req - 1) // ed.rate_req
-         |         END
-         |    END AS rate_ms
-         |  FROM f
-         |  LEFT JOIN h ON f.host = h.host
-         |  LEFT JOIN sel ON f.host = sel.host
-         |  LEFT JOIN fm ON f.url = fm.url
-         |  LEFT JOIN r mr ON mr.host = f.host AND mr.entry_seq = sel.es
-         |                  AND mr.rule_seq = fm.rs
-         |  LEFT JOIN e ed ON ed.host = f.host AND ed.entry_seq = sel.es),
-         |al AS (SELECT url, host,
-         |    CASE WHEN delay_s IS NULL AND rate_ms IS NULL THEN 3000
-         |         ELSE least(greatest(greatest(
-         |                CASE WHEN delay_s IS NULL THEN NULL
-         |                     ELSE least(delay_s, 5) * 1000 END, rate_ms), 500),
-         |                    5000) END AS delay_ms,
-         |    CAST(CAST('0x' || substr(md5(url), 1, 8) AS BIGINT) % 1000 AS INT)
-         |      AS pr
-         |  FROM dec WHERE allowed),
-         |w AS (SELECT url, host, delay_ms,
-         |    ROW_NUMBER() OVER (PARTITION BY host ORDER BY pr DESC, url)
-         |      AS fetch_seq
-         |  FROM al)
-         |SELECT url, host,
-         |  CAST(CAST('0x' || substr(md5('host:' || host), 1, 8) AS BIGINT) % 5
-         |    AS INT) AS worker,
-         |  fetch_seq, delay_ms, (fetch_seq - 1) * delay_ms AS est_start_ms
-         |FROM w""".stripMargin,
     "q_warc_records" ->
       // DuckDB re-parses the WARC stream from the raw file hex: header
       // block found via the even-aligned-hex regex trick ((?:..)*? keeps
@@ -1810,84 +1504,6 @@ object SparkEntry {
     "q_boilerplate_main" ->
       s"""SELECT url, blocks, stripped_elements, main_chars
          |FROM ${side("side_boiler")}""".stripMargin,
-    "q_media_features" ->
-      // kind + dims + WAV format re-derived INDEPENDENTLY from the raw
-      // payload hex: PNG/GIF at fixed offsets, JPEG via a recursive
-      // marker-chain walk, WAV via a recursive chunk walk. Only f0 (the
-      // documented stub feature) passes through side_media.
-      s"""WITH RECURSIVE raw AS (
-         |  SELECT media_id, ph, length(ph)/2 AS nb FROM ${side("side_media_raw")}),
-         |k AS (SELECT media_id, ph, nb,
-         |    CASE WHEN substr(ph,1,8)='89504E47' THEN 'image/png'
-         |         WHEN substr(ph,1,6)='FFD8FF' THEN 'image/jpeg'
-         |         WHEN substr(ph,1,8)='47494638' THEN 'image/gif'
-         |         WHEN substr(ph,1,8)='52494646' AND substr(ph,17,8)='57415645' THEN 'audio/wav'
-         |         WHEN substr(ph,1,8)='52494646' AND substr(ph,17,8)='41564920' THEN 'video/avi'
-         |         ELSE 'unknown' END AS kind
-         |  FROM raw),
-         |png AS (SELECT media_id,
-         |    ('0x'||substr(ph,33,8))::INT AS width,
-         |    ('0x'||substr(ph,41,8))::INT AS height
-         |  FROM k WHERE kind='image/png' AND nb>=24),
-         |gif AS (SELECT media_id,
-         |    ('0x'||substr(ph,15,2)||substr(ph,13,2))::INT AS width,
-         |    ('0x'||substr(ph,19,2)||substr(ph,17,2))::INT AS height
-         |  FROM k WHERE kind='image/gif' AND nb>=10),
-         |jrec(media_id, ph, nb, p) AS (
-         |  SELECT media_id, ph, nb, 2 FROM k WHERE kind='image/jpeg'
-         |  UNION ALL
-         |  SELECT media_id, ph, nb, p + 2 + ('0x'||substr(ph,2*p+5,4))::BIGINT
-         |  FROM jrec
-         |  WHERE p+4 <= nb
-         |    AND NOT (substr(ph,2*p+3,2) BETWEEN 'C0' AND 'CF'
-         |             AND substr(ph,2*p+3,2) NOT IN ('C4','C8','CC'))
-         |    AND substr(ph,2*p+3,2) NOT IN ('DA','D9')),
-         |jpg AS (SELECT media_id,
-         |    ('0x'||substr(ph,2*p+15,4))::INT AS width,
-         |    ('0x'||substr(ph,2*p+11,4))::INT AS height
-         |  FROM jrec
-         |  WHERE p+9 <= nb AND substr(ph,2*p+3,2) BETWEEN 'C0' AND 'CF'
-         |    AND substr(ph,2*p+3,2) NOT IN ('C4','C8','CC')),
-         |wrec(media_id, ph, nb, p) AS (
-         |  SELECT media_id, ph, nb, 12 FROM k WHERE kind='audio/wav' AND nb >= 36
-         |  UNION ALL
-         |  SELECT media_id, ph, nb,
-         |    p + 8 + ('0x'||substr(ph,2*p+15,2)||substr(ph,2*p+13,2)||substr(ph,2*p+11,2)||substr(ph,2*p+9,2))::BIGINT
-         |      + ('0x'||substr(ph,2*p+9,2))::BIGINT % 2
-         |  FROM wrec WHERE p+8 <= nb),
-         |wfmt AS (SELECT media_id,
-         |    ('0x'||substr(ph,2*p+23,2)||substr(ph,2*p+21,2))::INT AS channels,
-         |    ('0x'||substr(ph,2*p+31,2)||substr(ph,2*p+29,2)||substr(ph,2*p+27,2)||substr(ph,2*p+25,2))::INT AS sample_rate,
-         |    ('0x'||substr(ph,2*p+39,2)||substr(ph,2*p+37,2)||substr(ph,2*p+35,2)||substr(ph,2*p+33,2))::BIGINT AS byte_rate
-         |  FROM wrec WHERE p+24 <= nb AND substr(ph,2*p+1,8)='666D7420'),
-         |wdata AS (SELECT media_id,
-         |    ('0x'||substr(ph,2*p+15,2)||substr(ph,2*p+13,2)||substr(ph,2*p+11,2)||substr(ph,2*p+9,2))::BIGINT AS data_len
-         |  FROM wrec WHERE p+8 <= nb AND substr(ph,2*p+1,8)='64617461')
-         |SELECT k.media_id, k.kind,
-         |  COALESCE(png.width, jpg.width, gif.width) AS width,
-         |  COALESCE(png.height, jpg.height, gif.height) AS height,
-         |  wfmt.sample_rate, wfmt.channels,
-         |  CASE WHEN wdata.data_len IS NOT NULL AND wfmt.byte_rate > 0
-         |       THEN (wdata.data_len * 1000) // wfmt.byte_rate END AS duration_ms,
-         |  m.f0
-         |FROM k
-         |LEFT JOIN png USING (media_id) LEFT JOIN jpg USING (media_id)
-         |LEFT JOIN gif USING (media_id) LEFT JOIN wfmt USING (media_id)
-         |LEFT JOIN wdata USING (media_id)
-         |JOIN ${side("side_media")} m USING (media_id)""".stripMargin,
-    "q_media_resize" ->
-      // n_bytes + digest recomputed INDEPENDENTLY by DuckDB from the raw
-      // resized payload (md5 over the uppercase hex — both engines'
-      // hex() agree, and DuckDB's md5 only takes VARCHAR)
-      s"""SELECT media_id, width, height,
-         |  octet_length(resized) AS n_bytes,
-         |  md5(hex(resized)) AS payload_md5h
-         |FROM ${side("side_resized")}""".stripMargin,
-    "q_media_frames" ->
-      s"""SELECT media_id, frame_idx, ts_ms,
-         |  CAST(octet_length(frame) AS BIGINT) AS n_bytes,
-         |  md5(hex(frame)) AS frame_md5h
-         |FROM ${side("side_frames")}""".stripMargin,
     "q_minhash_lsh_pairs" ->
       // candidate pair generation + ranking re-derived relationally in
       // DuckDB from the per-doc band keys / signatures / shingle sets
@@ -2494,56 +2110,6 @@ object SparkEntry {
          |        FROM pr WHERE cos >= 0.30)
          |SELECT id_b AS drop_id, id_a AS trigger_id, cos
          |FROM hit WHERE pick = 1 ORDER BY drop_id""".stripMargin,
-    "q_priority_scores" ->
-      // the ENTIRE calculate_priority formula re-derived in SQL over the
-      // raw (url, last_updated) history side table
-      s"""WITH h AS (SELECT url, CAST(epoch(last_updated) AS DOUBLE) AS e
-         |           FROM ${side("side_pages")}),
-         |params AS (SELECT max(e) + 3600 AS as_of FROM h),
-         |agg AS (SELECT url, count(*) AS n, max(e) AS maxe FROM h GROUP BY url),
-         |freq AS (SELECT url, CAST(count(*) AS DOUBLE) /
-         |           (((SELECT as_of FROM params) - max(e)) / 86400.0 + 1.0) AS uf
-         |         FROM h WHERE e > (SELECT as_of FROM params) - 2592000 GROUP BY url),
-         |cand AS (SELECT a.url,
-         |           regexp_matches(a.url, 'page[0-9]*0\\.html$$') AS is_pagination,
-         |           CASE WHEN a.n >= 2 THEN a.maxe ELSE NULL END AS lm,
-         |           coalesce(f.uf, CAST(0 AS DOUBLE)) AS uf
-         |         FROM agg a LEFT JOIN freq f ON a.url = f.url),
-         |scored AS (SELECT url, is_pagination, uf,
-         |    CASE WHEN lm IS NULL THEN CAST(1 AS DOUBLE)
-         |         ELSE CAST(1 AS DOUBLE) /
-         |              (1.0 + ((SELECT as_of FROM params) - lm) / 86400.0) END AS fresh,
-         |    CAST(1 AS DOUBLE) / (1.0 + CAST(len(string_split(
-         |      regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)', 1),
-         |      '/')) - 1 AS DOUBLE)) AS ds,
-         |    least(CAST(
-         |        (CASE WHEN contains(lower(url), 'important') THEN 1 ELSE 0 END +
-         |         CASE WHEN contains(lower(url), 'critical') THEN 1 ELSE 0 END +
-         |         CASE WHEN contains(lower(url), 'update') THEN 1 ELSE 0 END +
-         |         CASE WHEN contains(lower(url), 'new') THEN 1 ELSE 0 END) AS DOUBLE) / 4.0,
-         |      CAST(1 AS DOUBLE)) AS rs
-         |  FROM cand)
-         |SELECT url, is_pagination,
-         |  round(uf, 6) AS update_frequency,
-         |  round(fresh, 6) AS freshness_score,
-         |  round(ds, 6) AS depth_score,
-         |  round(rs, 6) AS relevance_score,
-         |  round(CASE WHEN is_pagination
-         |    THEN (1.0 + least(uf / 10.0, CAST(1 AS DOUBLE)) * 0.3 + fresh * 0.3 +
-         |          ds * 0.2 + rs * 0.2) * 1.5
-         |    ELSE 1.0 + least(uf / 10.0, CAST(1 AS DOUBLE)) * 0.3 + fresh * 0.3 +
-         |         ds * 0.2 + rs * 0.2 END, 6) AS priority
-         |FROM scored""".stripMargin,
-    "q_sitemap_seeds" ->
-      // closed-world sitemapindex recursion re-derived via WITH RECURSIVE
-      s"""WITH RECURSIVE reach(u) AS (
-         |  SELECT 'https://site.example.com/sitemap.xml'
-         |  UNION
-         |  SELECT sm.loc FROM ${side("side_sitemap")} sm, reach
-         |  WHERE sm.url = reach.u AND sm.kind = 'sitemapindex')
-         |SELECT DISTINCT sm.loc AS seed_url
-         |FROM ${side("side_sitemap")} sm JOIN reach ON sm.url = reach.u
-         |WHERE sm.kind = 'urlset'""".stripMargin,
     "q_asof_join" ->
       // INDEPENDENT derivation: inequality join + per-probe argmax (the
       // textbook as-of formulation, quadratic per key — fine at oracle
@@ -2760,30 +2326,6 @@ object SparkEntry {
         |                CAST(ceil(q * CAST(total AS DOUBLE)) AS BIGINT)))
         |SELECT source, q, CAST(v AS BIGINT) AS value, cum AS n_le
         |FROM pick WHERE rn = 1""".stripMargin,
-    "q_crawl_budget" ->
-      // the largest-remainder method re-derived: integer floor + mod,
-      // leftover scalar, distinct-remainder above-counts, per-tie
-      // row_number by host
-      """WITH h AS (SELECT source AS host, CAST(count(*) AS BIGINT) AS n_pages
-        |           FROM documents GROUP BY 1),
-        |t AS (SELECT CAST(sum(n_pages) AS BIGINT) AS N FROM h),
-        |b AS (SELECT host, n_pages, (137 * n_pages) // N AS fl,
-        |        (137 * n_pages) % N AS rem
-        |      FROM h, t),
-        |lo AS (SELECT 137 - CAST(sum(fl) AS BIGINT) AS L FROM b),
-        |hist AS (SELECT rem, count(*) AS cnt FROM b GROUP BY 1),
-        |ab AS (SELECT rem, coalesce(sum(cnt) OVER (ORDER BY rem DESC
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |         AS above
-        |       FROM hist),
-        |rn AS (SELECT b.host, b.n_pages, b.fl, ab.above,
-        |         row_number() OVER (PARTITION BY b.rem ORDER BY b.host)
-        |           AS rn
-        |       FROM b JOIN ab ON b.rem = ab.rem)
-        |SELECT host, n_pages,
-        |  CAST(fl + CASE WHEN above + rn <= (SELECT L FROM lo)
-        |                 THEN 1 ELSE 0 END AS BIGINT) AS quota
-        |FROM rn""".stripMargin,
     "q_quantize_int8" ->
       // symmetric max-abs int8: the same left-associative (x·127)/m floor,
       // clamp, and integer audit sums re-derived over the raw embeddings
@@ -2834,58 +2376,6 @@ object SparkEntry {
         |d AS (SELECT q.vec_id, CAST(sum(q.qv * qq.qv) AS BIGINT) AS dot_q
         |      FROM q JOIN qq ON q.pos = qq.pos GROUP BY 1)
         |SELECT vec_id, dot_q FROM d
-        |ORDER BY dot_q DESC, vec_id LIMIT 10""".stripMargin,
-    "q_url_patterns" ->
-      // same template collapse: hex→H, digits→N, query values→V, fixed
-      // order, 'g' flag (Spark replaces all by default); host via the
-      // established lexical authority extraction
-      s"""WITH u AS (SELECT DISTINCT dst_url AS u FROM ${side("side_links")}),
-         |p AS (SELECT u,
-         |  lower(NULLIF(regexp_extract(u,
-         |    '$HostAuthorityRegex',
-         |    1), '')) AS host,
-         |  regexp_replace(regexp_replace(regexp_replace(lower(u),
-         |    '[0-9a-f]{8,}', 'H', 'g'), '[0-9]+', 'N', 'g'),
-         |    '=[^&#]*', '=V', 'g') AS pattern
-         |  FROM u)
-         |SELECT host, pattern, count(*) AS n_urls, min(u) AS sample_url,
-         |       count(*) > 20 AS is_trap
-         |FROM p GROUP BY 1, 2""".stripMargin,
-    "q_media_decode" ->
-      // the 64×32 two-tone raster (left 32 cols color A(id), right 32
-      // color B(id)) and its 16×8 box resize (4×4 boxes never straddle
-      // the split, box average of a constant is exact), all channel
-      // sums as closed-form integer arithmetic in the id
-      """WITH ids AS (SELECT unnest(generate_series(0, 199)) AS i),
-        |c AS (SELECT CAST(i AS BIGINT) AS media_id,
-        |        CAST(i % 256 AS BIGINT) AS ar,
-        |        CAST((i * 7) % 256 AS BIGINT) AS ag,
-        |        CAST((i * 13) % 256 AS BIGINT) AS ab,
-        |        CAST((i * 3) % 256 AS BIGINT) AS br,
-        |        CAST((i * 5) % 256 AS BIGINT) AS bg,
-        |        CAST((i * 11) % 256 AS BIGINT) AS bb
-        |      FROM ids)
-        |SELECT media_id,
-        |       CAST(64 AS INT) AS width, CAST(32 AS INT) AS height,
-        |       32 * (32 * ar + 32 * br) AS sum_r,
-        |       32 * (32 * ag + 32 * bg) AS sum_g,
-        |       32 * (32 * ab + 32 * bb) AS sum_b,
-        |       CAST(16 AS INT) AS r_width, CAST(8 AS INT) AS r_height,
-        |       8 * (8 * ar + 8 * br) AS r_sum_r,
-        |       8 * (8 * ag + 8 * bg) AS r_sum_g,
-        |       8 * (8 * ab + 8 * bb) AS r_sum_b
-        |FROM c""".stripMargin,
-    "q_audio_decode" ->
-      // sample i of clip id = ((id·31 + i·7) mod 2001) − 1000; sums,
-      // absolute sums, and peaks re-derived per clip by generate_series
-      """WITH ids AS (SELECT unnest(generate_series(0, 199)) AS id),
-        |s AS (SELECT CAST(id AS BIGINT) AS media_id,
-        |        CAST((id * 31 + u.i * 7) % 2001 - 1000 AS BIGINT) AS v
-        |      FROM ids, UNNEST(generate_series(0, 255)) AS u(i))
-        |SELECT media_id, count(*) AS n_samples,
-        |       CAST(sum(v) AS BIGINT) AS sum_samples,
-        |       CAST(sum(abs(v)) AS BIGINT) AS sum_abs,
-        |       max(abs(v)) AS peak_abs
-        |FROM s GROUP BY media_id""".stripMargin
+        |ORDER BY dot_q DESC, vec_id LIMIT 10""".stripMargin
   ))
 }

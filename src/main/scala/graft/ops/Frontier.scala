@@ -45,24 +45,31 @@ object Frontier {
   def politenessSchedule(frontier: DataFrame, numWorkers: Int = 5,
                          delayMs: Long = 3000L,
                          urlCol: String = "url",
-                         priorityCol: String = "priority_score"): DataFrame = {
-    require(numWorkers > 0, s"numWorkers must be positive: $numWorkers")
-    val d = math.min(math.max(delayMs, 500L), 5000L)
-    val slim = frontier.select(col(urlCol).as("url"),
-      col(priorityCol).as("__p"),
+                         priorityCol: String = "priority_score"): DataFrame =
+    waves(frontier.select(col(urlCol).as("url"),
       // try_parse_url: ANSI-mode parse_url THROWS on malformed urls, and a
       // frontier of extracted links is untrusted input by definition
-      expr(s"try_parse_url($urlCol, 'HOST')").as("host"))
+      expr(s"try_parse_url($urlCol, 'HOST')").as("host"),
+      col(priorityCol).as("__p"), lit(delayMs).as("__delay")), numWorkers)
+      .drop("delay_ms")
+
+  /** The schedule tail of both plans (see `politenessSchedule`), with
+    * `__delay` clamped to [500, 5000] ms. slim: (url, host, __p, __delay).
+    * Returns (url, host, worker, fetch_seq, delay_ms, est_start_ms). */
+  private def waves(slim: DataFrame, numWorkers: Int): DataFrame = {
+    require(numWorkers > 0, s"numWorkers must be positive: $numWorkers")
     val worker = pmod(
       conv(substring(md5(concat(lit("host:"), col("host"))), 1, 8), 16, 10)
         .cast("long"),
       lit(numWorkers.toLong)).cast("int")
+    val delay = least(greatest(col("__delay").cast("long"), lit(500L)), lit(5000L))
     slim
       .withColumn("fetch_seq", row_number().over(
         Window.partitionBy(col("host"))
           .orderBy(col("__p").desc, col("url"))))
       .select(col("url"), col("host"), worker.as("worker"), col("fetch_seq"),
-        ((col("fetch_seq") - 1).cast("long") * lit(d)).as("est_start_ms"))
+        delay.as("delay_ms"),
+        ((col("fetch_seq") - 1).cast("long") * delay).as("est_start_ms"))
   }
 
   /**
@@ -77,7 +84,10 @@ object Frontier {
    * DynamicRateLimiter's [500, 5000] ms bounds exactly like every runtime
    * delay update (core/rate_limiter.py:29-36) — a 3600 s crawl-delay
    * therefore paces at 5 s, the limiter's ceiling, and hosts with
-   * neither directive use `defaultDelayMs`.
+   * neither directive use `defaultDelayMs`. The priority rides through
+   * the gate, so the frontier is read once and each allowed frontier row
+   * gives one plan row; a NULL url or unparsable host is kept with a NULL
+   * host and worker, as in `politenessSchedule`.
    *
    * frontier: (urlCol, priorityCol, ...). Returns
    * (url, host, worker, fetch_seq, delay_ms, est_start_ms).
@@ -86,12 +96,9 @@ object Frontier {
                 numWorkers: Int = 5, defaultDelayMs: Long = 3000L,
                 urlCol: String = "url",
                 priorityCol: String = "priority_score"): DataFrame = {
-    require(numWorkers > 0, s"numWorkers must be positive: $numWorkers")
-    val dflt = math.min(math.max(defaultDelayMs, 500L), 5000L)
-    val allowed = robotsFilter(frontier, robots, userAgent, urlCol)
+    val allowed = gate(frontier.select(col(urlCol).cast("string").as("url"),
+        col(priorityCol).as("__p")), robots, userAgent)
       .filter(col("allowed"))
-      .join(frontier.select(col(urlCol).as("url"),
-        col(priorityCol).as("__p")), Seq("url"))
       .withColumn("__rate_ms",
         // Request-rate r/s paces one fetch per ceil(s*1000/r) ms; guard
         // r > 0 (robotparser accepts "0/0"). Overflow-armored for hostile
@@ -119,21 +126,8 @@ object Frontier {
           when(col("crawl_delay_s").isNotNull,
             least(col("crawl_delay_s"), lit(5L)) * 1000L),
           col("__rate_ms")))
-      .withColumn("delay_ms",
-        when(col("__raw_ms").isNull, lit(dflt))
-          .otherwise(least(greatest(col("__raw_ms"), lit(500L)), lit(5000L))))
-    val worker = pmod(
-      conv(substring(md5(concat(lit("host:"), col("host"))), 1, 8), 16, 10)
-        .cast("long"),
-      lit(numWorkers.toLong)).cast("int")
-    allowed
-      .withColumn("fetch_seq", row_number().over(
-        Window.partitionBy(col("host"))
-          .orderBy(col("__p").desc, col("url"))))
-      .select(col("url"), col("host"), worker.as("worker"), col("fetch_seq"),
-        col("delay_ms").cast("long").as("delay_ms"),
-        ((col("fetch_seq") - 1).cast("long") * col("delay_ms").cast("long"))
-          .as("est_start_ms"))
+    waves(allowed.select(col("url"), col("host"), col("__p"),
+      coalesce(col("__raw_ms"), lit(defaultDelayMs)).as("__delay")), numWorkers)
   }
 
   /** One Allow/Disallow prefix of the entry selected for the crawl agent. */
@@ -190,16 +184,17 @@ object Frontier {
   /** (url, match_path, host) — the normalized per-url probe frame
     * `robotsFilter` matches rule prefixes against (exported as
     * side_rb_frontier so the oracle takes the CPython-pinned match path
-    * as INPUT and re-derives everything relational downstream of it). */
-  def frontierPaths(frontier: DataFrame, urlCol: String = "url"): DataFrame = {
-    val spark = frontier.sparkSession
-    import spark.implicits._
-    frontier.select(col(urlCol).cast("string").as("url"))
-      .as[String]
-      .map(u => (u, graft.url.RobotsTxt.matchPath(u)))
-      .toDF("url", "match_path")
+    * as INPUT and re-derives everything relational downstream of it). A
+    * NULL url gets a NULL match_path and host. */
+  def frontierPaths(frontier: DataFrame, urlCol: String = "url"): DataFrame =
+    withPaths(frontier.select(col(urlCol).cast("string").as("url")))
+
+  /** `frontier` (a string `url`, then any carried columns) plus the url's
+    * match_path and host. */
+  private def withPaths(frontier: DataFrame): DataFrame =
+    frontier.withColumn("match_path", udf((u: String) =>
+        if (u == null) null else graft.url.RobotsTxt.matchPath(u)).apply(col("url")))
       .withColumn("host", expr("try_parse_url(url, 'HOST')"))
-  }
 
   /**
    * The FULL parsed robots structure as three relational frames — the
@@ -256,21 +251,31 @@ object Frontier {
    *    (`filter(rules, ...)` + null-safe `get(..., 0)` — first match =
    *    head of the order-preserving filter), so the hot path stays inside
    *    whole-stage codegen; only the tiny match-path normalization
-   *    (quote∘urlunparse∘urlparse∘unquote, CPython-pinned) is a typed map;
+   *    (quote∘urlunparse∘urlparse∘unquote, CPython-pinned) is a Scala UDF;
    *  - the only shuffle carries (url, host, match_path) and the per-host
    *    policy rows — never page payloads;
    *  - a host ABSENT from the robots corpus is `no_robots` (allow — the
    *    404 branch of `RobotFileParser.read()`), kept visible rather than
-   *    silently merged into the rule path.
+   *    silently merged into the rule path; so is a NULL url (NULL
+   *    match_path and host).
    *
-   * Returns (url, host, match_path, allowed, decision, crawl_delay_s);
+   * Returns (url, host, match_path, allowed, decision, crawl_delay_s,
+   * rate_req, rate_secs);
    * `decision` names the branch that decided, and is re-derived
    * relationally by the q_robots_filter oracle from status + parsed
    * structure alone.
    */
   def robotsFilter(frontier: DataFrame, robots: DataFrame, userAgent: String,
-                   urlCol: String = "url"): DataFrame = {
-    val joined = frontierPaths(frontier, urlCol).join(
+                   urlCol: String = "url"): DataFrame =
+    gate(frontier.select(col(urlCol).cast("string").as("url")), robots,
+      userAgent)
+
+  /** `robotsFilter` over a slim frontier: a string `url`, then columns
+    * that ride through the gate unchanged after its own. */
+  private def gate(frontier: DataFrame, robots: DataFrame,
+                   userAgent: String): DataFrame = {
+    val carried = frontier.columns.filter(_ != "url").map(col).toSeq
+    val joined = withPaths(frontier).join(
       hostPolicies(robots, userAgent).withColumnRenamed("host", "__rh"),
       col("host") === col("__rh"), "left")
     val firstMatch = expr(
@@ -291,11 +296,11 @@ object Frontier {
           "entry_default"), true)
           .when(col("decision") === "rule", col("__m").getField("allow"))
           .otherwise(false))
-      .select(col("url"), col("host"), col("match_path"), col("allowed"),
+      .select(Seq(col("url"), col("host"), col("match_path"), col("allowed"),
         col("decision"),
         when(col("has_entry"), col("crawl_delay_s")).as("crawl_delay_s"),
         when(col("has_entry"), col("rate_req")).as("rate_req"),
-        when(col("has_entry"), col("rate_secs")).as("rate_secs"))
+        when(col("has_entry"), col("rate_secs")).as("rate_secs")) ++ carried: _*)
   }
 
   /**
@@ -338,21 +343,6 @@ object Frontier {
       }.toDF("host", "status", "body")
   }
 
-  /** Crawl-trap detection by URL-pattern family — the frontier hygiene
-    * pass every crawler needs (calendar pages, faceted search, session
-    * ids: parametric URL families that are infinite to a BFS but one
-    * template to a human). URLs collapse to a template: lowercase, long
-    * hex runs → `H` (session ids / digests), digit runs → `N`
-    * (pages/dates/ids), query VALUES → `V` (facets) — fixed order, all
-    * three regexes in the RE2∩Java subset (character classes + bounded
-    * repetition only; the oracle runs DuckDB's regexp_replace with the
-    * 'g' flag, which matches Spark's replace-all default). A family
-    * bigger than `trapThreshold` flags as a trap; downstream the flag
-    * anti-joins the frontier exactly like the blocklist.
-    *
-    * Scale: one codegen'd per-row projection, then a
-    * map-side-combinable (host, pattern) count — no distinct-URL state
-    * anywhere. Emits (host, pattern, n_urls, sample_url, is_trap). */
   /**
    * Per-host crawl-budget allocation by the largest-remainder method —
    * the proportional-fair split of a global fetch budget B across hosts
@@ -483,6 +473,21 @@ object Frontier {
           col("n_docs") * lit(maxFailedNum.toLong))
   }
 
+  /** Crawl-trap detection by URL-pattern family — the frontier hygiene
+    * pass every crawler needs (calendar pages, faceted search, session
+    * ids: parametric URL families that are infinite to a BFS but one
+    * template to a human). URLs collapse to a template: lowercase, long
+    * hex runs → `H` (session ids / digests), digit runs → `N`
+    * (pages/dates/ids), query VALUES → `V` (facets) — fixed order, all
+    * three regexes in the RE2∩Java subset (character classes + bounded
+    * repetition only; the oracle runs DuckDB's regexp_replace with the
+    * 'g' flag, which matches Spark's replace-all default). A family
+    * bigger than `trapThreshold` flags as a trap; downstream the flag
+    * anti-joins the frontier exactly like the blocklist.
+    *
+    * Scale: one codegen'd per-row projection, then a
+    * map-side-combinable (host, pattern) count — no distinct-URL state
+    * anywhere. Emits (host, pattern, n_urls, sample_url, is_trap). */
   def urlPatternFamilies(urls: DataFrame, urlCol: String = "url",
                          trapThreshold: Long = 1000L): DataFrame = {
     require(trapThreshold > 0, s"trapThreshold must be positive")

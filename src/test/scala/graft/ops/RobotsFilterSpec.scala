@@ -140,6 +140,33 @@ class RobotsFilterSpec extends AnyFunSuite {
     assert(plan("h3.com") == 500L)  // ~0.0000006 ms pacing floors at 500
   }
 
+  test("a null url is kept: no_robots in the gate, NULL host and worker in the plan") {
+    val robots = Seq(("a.com", 200, "User-agent: *\nDisallow: /no\n"))
+      .toDF("host", "status", "body")
+    val frontier = Seq(("https://a.com/yes", 2), (null, 1))
+      .toDF("url", "priority_score")
+    val gate = Frontier.robotsFilter(frontier, robots, Agent)
+      .filter($"url".isNull).collect()
+    assert(gate.length == 1)
+    assert(gate.head.isNullAt(1) && gate.head.isNullAt(2)) // host, match_path
+    assert(gate.head.getBoolean(3) && gate.head.getString(4) == "no_robots")
+    val plan = Frontier.crawlPlan(frontier, robots, Agent)
+      .filter($"url".isNull).collect()
+    assert(plan.length == 1)
+    assert(plan.head.isNullAt(1) && plan.head.isNullAt(2)) // host, worker
+    assert(plan.head.getInt(3) == 1 && plan.head.getLong(4) == 3000L)
+  }
+
+  test("crawlPlan gives one plan row per allowed frontier row") {
+    val robots = Seq(("a.com", 200, "User-agent: *\nDisallow: /no\n"))
+      .toDF("host", "status", "body")
+    val frontier = Seq(("https://a.com/x", 5), ("https://a.com/x", 5),
+      ("https://a.com/no", 9)).toDF("url", "priority_score")
+    val plan = Frontier.crawlPlan(frontier, robots, Agent).collect()
+    assert(plan.map(_.getString(0)).toSeq == Seq("https://a.com/x", "https://a.com/x"))
+    assert(plan.map(_.getInt(3)).sorted.toSeq == Seq(1, 2)) // fetch_seq
+  }
+
   test("parsed-structure export is consistent with the policy reduction") {
     val hosts = (0 until 32).map(i => s"host$i.example.com").toDF("host")
     val robots = Frontier.syntheticRobots(hosts, "host").persist()
